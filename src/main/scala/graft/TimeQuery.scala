@@ -51,6 +51,11 @@ object TimeQuery {
       q.name != "q01_pricing_summary"
     val pre = if (bracket) Some(graft.tools.CanaryBracket.probe(spark, 3)) else None
     pre.foreach(p => println(f"[bracket] pre q01=${graft.tools.CanaryBracket.fmtQ01(p)} kernel=${p.kernel}%.3f"))
+    // the probe's own jobs must not count toward run0; drain first so
+    // none of them is delivered after the reset
+    def drain(): Unit =
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark.sparkContext)
+    jobCounter.foreach { c => drain(); c.set(0) }
     (0 until runs).foreach { i =>
       // keep only the final run; drain the async bus first so a prior
       // run's tail events can't survive the reset and double-count
@@ -61,7 +66,7 @@ object TimeQuery {
         else { q.build(spark, dir).write.mode("overwrite").format("noop").save(); -1L }
       val secs = (System.nanoTime() - t0) / 1e9
       val suffix = if (wantCount) f" rows=$rows" else ""
-      val jobs = jobCounter.map(c => s" jobs=${c.getAndSet(0)}").getOrElse("")
+      val jobs = jobCounter.map { c => drain(); s" jobs=${c.getAndSet(0)}" }.getOrElse("")
       println(f"[time] ${q.name} run$i: $secs%.2f s$suffix$jobs")
     }
     if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))

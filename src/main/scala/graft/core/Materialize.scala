@@ -1,6 +1,10 @@
 package graft.core
 
+import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.AtomicLong
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -114,30 +118,38 @@ object Materialize {
     val s = df.sparkSession
     val obs = org.apache.spark.sql.Observation()
     val withObs = df.observe(obs, metrics.head, metrics.tail: _*)
-    val out = mode(s) match {
-      case "reliable" =>
+    val reliable = mode(s) == "reliable"
+    val out =
+      if (reliable) {
         val p = freshScratchPath(s, hint)
         withObs.write.mode("overwrite").parquet(p)
         s.read.parquet(p)
-      case _ => withObs.localCheckpoint()
-    }
+      } else withObs.localCheckpoint()
     // Env-gated FINAL-plan dump (`SPARK_GRAFT_MAT_EXPLAIN=1`): after the
     // action, the AdaptiveSparkPlan is final — the only view that shows
     // runtime ReusedExchange / AQEShuffleRead decisions (plans evidence;
-    // diagnostic only).
-    if (sys.env.contains("SPARK_GRAFT_MAT_EXPLAIN")) {
+    // diagnostic only). Local mode only: in reliable mode the action ran
+    // through the parquet writer, and `withObs` would plan afresh.
+    if (!reliable && sys.env.contains("SPARK_GRAFT_MAT_EXPLAIN")) {
       println(s"===== materialize[$hint] executed plan =====")
       println(withObs.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     }
-    if (sys.env.contains("SPARK_GRAFT_OBS_DEBUG")) {
-      val t0 = System.nanoTime()
-      val m = obs.get
+    // the materialize was eager, so the metrics are already on their way
+    // through the listener bus; a bounded wait turns a lost delivery into
+    // a loud failure instead of a hang
+    val t0 = System.nanoTime()
+    val row = try Await.result(obs.future, ObservedTimeout) catch {
+      case e: TimeoutException => throw new IllegalStateException(
+        s"materialize[$hint]: observed metrics not delivered within $ObservedTimeout", e)
+    }
+    if (sys.env.contains("SPARK_GRAFT_OBS_DEBUG"))
       println(f"[obs-debug] $hint get-wait ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-      (out, m)
-    } else
-      (out, obs.get) // the materialize was eager, so get() has its metrics
+    (out, row.getValuesMap[Any](row.schema.fieldNames.toSeq))
   }
+
+  /** Bound on [[observed]]'s wait for its metrics after the action. */
+  private val ObservedTimeout: FiniteDuration = 2.minutes
 
   /** Postfix syntax so call sites read like the `.localCheckpoint()`
     * they replace: `frame.materialize` / `frame.materialize("bands")`. */

@@ -87,6 +87,9 @@ final class MiniHadoopApi(
 
   private val seq = new AtomicLong()
   private val infos = new ConcurrentHashMap[String, JobInfo]()
+  /** Monitor signalled when a runner is done with a job (terminal status
+    * set, running list updated); `awaitJob` waits on it. */
+  private val finished = new Object
   // Bounded at the queue itself so the `queue_full` check is atomic: the
   // reference serializes submits through a GenServer; here concurrent
   // submitters race, and a check-then-put against an unbounded deque can
@@ -231,6 +234,9 @@ final class MiniHadoopApi(
     } finally {
       spark.sparkContext.clearJobGroup()
       runningIds.remove(q.jobId)
+      // wake awaitJob callers only now, so a woken caller sees the job
+      // terminal AND off the running list
+      finished.synchronized(finished.notifyAll())
     }
   }
 
@@ -327,17 +333,24 @@ final class MiniHadoopApi(
       case Some(info) => Right(info.copy(progress = progressOf(jobId)))
     }
 
-  /** Poll until the job reaches a terminal status or the timeout lapses;
-    * returns the last observed info (the caller checks `.status`). */
+  /** Wait until the job reaches a terminal status or the timeout lapses;
+    * returns the last observed info (the caller checks `.status`). The
+    * status is read under the monitor a runner signals once it is done
+    * with a job, so a job finishing between the read and the wait is not
+    * missed. */
   def awaitJob(jobId: String, timeoutMs: Long = 120000): Either[String, JobInfo] = {
     val deadline = System.currentTimeMillis() + timeoutMs
-    var last = jobInfo(jobId)
-    while (System.currentTimeMillis() < deadline &&
-        last.exists(i => i.status == "pending" || i.status == "running")) {
-      Thread.sleep(50)
-      last = jobInfo(jobId)
+    finished.synchronized {
+      var last = jobInfo(jobId)
+      var left = deadline - System.currentTimeMillis()
+      while (left > 0 &&
+          last.exists(i => i.status == "pending" || i.status == "running")) {
+        finished.wait(left)
+        last = jobInfo(jobId)
+        left = deadline - System.currentTimeMillis()
+      }
+      last
     }
-    last
   }
 
   def listRunningJobs: Seq[String] = {

@@ -1100,8 +1100,8 @@ object DedupOps {
     * labels₀ = min(self, direct neighbors) is one aggregate over the
     * adjacency (exchange-free on a bucketed `symAdj`), where the old
     * shape paid a distinct() scan just to seed labels = self. Labels
-    * are localCheckpoint-ed per round to keep lineage bounded (same
-    * discipline as [[graft.examples.PageRank.runUntil]]); the jump
+    * are localCheckpoint-ed per round to keep lineage bounded (a
+    * DataFrame plan re-analyzes its whole lineage every round); the jump
     * result is materialized separately so the next round's two
     * consumers (edge join + convergence sum) read blocks, not a
     * recomputed self-join.

@@ -14,8 +14,10 @@ import graft.operators.DedupOps
   *   - `cc`: runs d06's connected components with
   *     `SPARK_GRAFT_CC_EXPLAIN=1` so the loop prints round-1 interior
   *     plans (set the env when invoking; this main just drives the op).
+  *   - `containment`: the d09 candidate frame as returned by
+  *     [[DedupOps.containmentCandidatesOn]].
   *
-  * Usage: `tools/run.sh graft.tools.InteriorPlans [kernel|cc] [sfDir]`.
+  * Usage: `tools/run.sh graft.tools.InteriorPlans [kernel|cc|containment] [sfDir]`.
   * Diagnostic only — not part of the bench or verify contract.
   */
 object InteriorPlans {
@@ -44,7 +46,7 @@ object InteriorPlans {
         println("===== d09 candidate interior (containmentCandidatesOn) =====")
         println(cand.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-      case other => sys.error(s"unknown dump '$other' (kernel|cc)")
+      case other => sys.error(s"unknown dump '$other' (kernel|cc|containment)")
     }
     spark.stop()
   }

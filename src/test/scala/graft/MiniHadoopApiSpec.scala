@@ -83,6 +83,32 @@ class MiniHadoopApiSpec extends AnyFunSuite {
     } finally api.close()
   }
 
+  test("awaitJob wakes when the job finishes, well before its timeout") {
+    val api = new MiniHadoopApi(spark)
+    try {
+      val gate = new CountDownLatch(1)
+      val id = api.submitRaw("late")(() => {
+        gate.await()
+        graft.core.JobResult("j", "t", sorted = false, entries = 1)
+      }).toOption.get
+      @volatile var got: Either[String, graft.core.JobInfo] = Left("unset")
+      val waiter = new Thread(() => got = api.awaitJob(id, timeoutMs = 60000))
+      waiter.start()
+      // finish the job only once the waiter is parked inside awaitJob
+      val deadline = System.currentTimeMillis() + 10000
+      while (waiter.getState != Thread.State.TIMED_WAITING &&
+        System.currentTimeMillis() < deadline) Thread.sleep(5)
+      assert(waiter.getState == Thread.State.TIMED_WAITING)
+      val t0 = System.nanoTime()
+      gate.countDown()
+      waiter.join(60000)
+      val wokeMs = (System.nanoTime() - t0) / 1e6
+      assert(!waiter.isAlive)
+      assert(got.toOption.get.status == "completed", got)
+      assert(wokeMs < 5000, s"waiter woke ${wokeMs} ms after the job finished")
+    } finally api.close()
+  }
+
   test("a FATAL thunk error marks the job failed and the runner keeps draining") {
     val api = new MiniHadoopApi(spark)
     try {
