@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * re-planning behaves the same way it would at 100 TB.
   */
 object Session {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local-mode cores and shuffle width: `$SPARK_GRAFT_CPUS` when set,
+    * else every core this JVM sees. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   /** Master override (r13 verdict ask #2): `SPARK_GRAFT_MASTER=
     * local-cluster[4,8,4096]` runs the SAME session as a real multi-JVM

@@ -131,18 +131,10 @@ object Verify {
       require(unknown.isEmpty,
         s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER (e.g. local-cluster[4,8,4096]) routes the board
-    // through Session's multi-JVM wiring — the cross-JVM correctness
-    // receipt; default stays a right-sized in-process session.
-    val spark =
-      if (sys.env.contains("SPARK_GRAFT_MASTER"))
-        Session.builder("graft-verify").getOrCreate()
-      else Session.builder("graft-verify")
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Session's wiring: local[$SPARK_GRAFT_CPUS] by default, or
+    // SPARK_GRAFT_MASTER (e.g. local-cluster[4,8,4096]) for the
+    // cross-JVM correctness receipt
+    val spark = Session.get("graft-verify")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

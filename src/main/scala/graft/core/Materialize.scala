@@ -125,26 +125,13 @@ object Materialize {
         withObs.write.mode("overwrite").parquet(p)
         s.read.parquet(p)
       } else withObs.localCheckpoint()
-    // Env-gated FINAL-plan dump (`SPARK_GRAFT_MAT_EXPLAIN=1`): after the
-    // action, the AdaptiveSparkPlan is final — the only view that shows
-    // runtime ReusedExchange / AQEShuffleRead decisions (plans evidence;
-    // diagnostic only). Local mode only: in reliable mode the action ran
-    // through the parquet writer, and `withObs` would plan afresh.
-    if (!reliable && sys.env.contains("SPARK_GRAFT_MAT_EXPLAIN")) {
-      println(s"===== materialize[$hint] executed plan =====")
-      println(withObs.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
     // the materialize was eager, so the metrics are already on their way
     // through the listener bus; a bounded wait turns a lost delivery into
     // a loud failure instead of a hang
-    val t0 = System.nanoTime()
     val row = try Await.result(obs.future, ObservedTimeout) catch {
       case e: TimeoutException => throw new IllegalStateException(
         s"materialize[$hint]: observed metrics not delivered within $ObservedTimeout", e)
     }
-    if (sys.env.contains("SPARK_GRAFT_OBS_DEBUG"))
-      println(f"[obs-debug] $hint get-wait ${(System.nanoTime() - t0) / 1e6}%.1f ms")
     (out, row.getValuesMap[Any](row.schema.fieldNames.toSeq))
   }
 

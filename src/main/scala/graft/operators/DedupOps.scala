@@ -28,19 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupOps {
 
-  /** Env-gated interior-plan dump (`SPARK_GRAFT_CC_EXPLAIN=1`): the CC
-    * loop's per-round frames live behind `materialize` boundaries, so the
-    * final query explain shows only ExistingRDD scans — this prints the
-    * round's plan BEFORE it is materialized, which is the only view that
-    * shows the Exchange structure the optimization claims are about
-    * (plans/r17 evidence; diagnostic only, never on in bench/verify). */
-  private def ccExplain(tag: String, df: DataFrame): Unit =
-    if (sys.env.contains("SPARK_GRAFT_CC_EXPLAIN")) {
-      println(s"===== cc-interior $tag =====")
-      println(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
-    }
-
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.df(s, dir, "documents")
 
@@ -353,9 +340,8 @@ object DedupOps {
   // miss B — one more miss proves J < t, and a non-(−1) return is the
   // EXACT intersection, so the surviving pairs' jac is bit-identical
   // to the unbudgeted division.
-  /** Test/measurement override for [[exactVerify]]'s broadcast decision
-    * (spec pins the forced shuffle-hash plan; the sf1.0 forced-run ledger
-    * row uses the `SPARK_GRAFT_VERIFY_BC=false` env form). */
+  /** Test override for [[exactVerify]]'s broadcast decision (specs pin
+    * the forced shuffle-hash plan). */
   @volatile private[graft] var verifyBcOverride: Option[Boolean] = None
 
   /** TEST-ONLY ablation knobs (SaltedPlanGuardSpec). The salted kernels'
@@ -377,37 +363,9 @@ object DedupOps {
   /** Salt width for hot posting lists (docs per group). 1024 bounds a
     * task's enumeration at ~GroupB² ≈ 1M pairs (~1 s of verify-shaped
     * work) while keeping the replication overhead ≈ candidates/GroupB —
-    * two orders below the enumeration it spreads. Tunable via session
-    * conf `graft.dedup.groupB` so the sf10 sensitivity sweep (BASELINE
-    * ledger) can probe the plateau without a rebuild; the default IS the
-    * measured plateau point. */
-  private def saltGroupB(s: SparkSession): Int = {
-    // The sweep override is deliberately validated and LOUD: a stray
-    // `SET graft.dedup.groupB=<huge>` (or a leftover SPARK_GRAFT_GROUPB
-    // in the shell) would silently disable hot-token salting with
-    // byte-identical output — the straggler-restoring failure class the
-    // ablation knobs were kept off confs to prevent. Reject anything
-    // that isn't a positive int naming its source, and echo any
-    // non-default width so sweep overrides are visible in tool output.
-    val fromConf = s.conf.getOption("graft.dedup.groupB")
-      .map(v => ("session conf graft.dedup.groupB", v))
-    val src = fromConf.orElse( // fresh-JVM sweep tools
-      sys.env.get("SPARK_GRAFT_GROUPB").map(v => ("env SPARK_GRAFT_GROUPB", v)))
-    src match {
-      case None => 1024
-      case Some((where, raw)) =>
-        val v = try raw.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$where must be a positive int (docs per salt group); got '$raw'")
-        }
-        if (v <= 0) throw new IllegalArgumentException(
-          s"$where must be a positive int (docs per salt group); got $v")
-        if (v != 1024) System.err.println(
-          s"[dedup] hot-token salt GroupB=$v via $where (measured plateau " +
-            "default: 1024) — sweep override active")
-        v
-    }
-  }
+    * two orders below the enumeration it spreads; it is the measured
+    * plateau point of the sf10 sensitivity sweep (BASELINE ledger). */
+  private val GroupB = 1024
   private def widen(df: DataFrame, n: Int, keys: Column*): DataFrame =
     if (ablateExplicitWidth) df else df.repartition(n, keys: _*)
   /** The [[exactVerify]] broadcast-guard estimate (row count, Σ|hs|) as
@@ -442,21 +400,10 @@ object DedupOps {
     // and cap at the lower of a fixed budget and a fraction of the
     // live driver heap (TWO copies broadcast: the doc_a and doc_b
     // aliases).
-    // Resolve the override/env decision FIRST: the count+sum estimation
-    // is itself a Spark job over the sets frame, and a forced run
-    // (verifyBcOverride or SPARK_GRAFT_VERIFY_BC) must not pay that
-    // wasted pass. Env parse is defensive — a malformed value names the
-    // variable instead of surfacing a bare toBoolean exception.
-    val forced = verifyBcOverride.orElse(
-      sys.env.get("SPARK_GRAFT_VERIFY_BC").map { v =>
-        v.trim.toLowerCase match {
-          case "true" | "1" => true
-          case "false" | "0" => false
-          case other => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_VERIFY_BC must be true/false, got '$other'")
-        }
-      })
-    val bc = forced.getOrElse {
+    // Resolve the override FIRST: the count+sum estimation is itself a
+    // Spark job over the sets frame, and a forced run must not pay that
+    // wasted pass.
+    val bc = verifyBcOverride.getOrElse {
       val (n, e) = est.getOrElse {
         val st = sets.agg(count(lit(1)).as("n"),
           coalesce(sum(size(col("hs"))), lit(0L)).as("e")).head()
@@ -1211,16 +1158,15 @@ object DedupOps {
       // Exchange(node) via ReusedExchange — the edge-sized union +
       // partial aggregate computes ONCE, only the label-sized final
       // aggregate runs per side — so the round no longer pays a second
-      // materialize plus its driver/AQE gap (guide §2.4/§2.6; the plan
-      // is pinned by plans/r17/cc_round_interior_after.txt and the
-      // reuse by DedupCCSpec).
+      // materialize plus its driver/AQE gap (guide §2.4/§2.6; DedupCCSpec
+      // pins the single union shuffle and its reuse, and fails without
+      // the non-null filter above).
       val parent = hopped.select(
         col("node").as("p_node"), col("component").as("p_comp"))
       val nextPlan = hopped
         .join(parent, hopped("component") === parent("p_node"), "left")
         .select(hopped("node"),
           coalesce(col("p_comp"), hopped("component")).as("component"))
-      if (round == 0) ccExplain("fused-hop-jump", nextPlan)
       val (next, nextSum) = materializeSummed(nextPlan)
       if (numericIds) {
         changed = nextSum.compareTo(prevSum) != 0
@@ -1439,7 +1385,6 @@ object DedupOps {
     // corpora) keep g = 1 and the exact pre-salt shape. The hot-token
     // frame is tiny by construction (tokens with >GroupB prefix
     // occurrences), so its join is a broadcast.
-    val GroupB = saltGroupB(pref0.sparkSession)
     val hotR = pref0.groupBy("r").agg(count(lit(1)).as("dfr"))
       .filter(col("dfr") > GroupB)
       .select(col("r"), ceil(col("dfr") / GroupB.toDouble).cast("int").as("g"))
@@ -1883,7 +1828,6 @@ object DedupOps {
     // groupBy(doc_a, doc_b) is untouched. Cold tokens (df ≤ GroupB)
     // keep g = 1, the exact pre-salt plan. The hot-token frame is tiny
     // by construction → broadcast joins.
-    val GroupB = saltGroupB(sets.sparkSession)
     val hotH = tok.groupBy("h").agg(count(lit(1)).as("dfh"))
       .filter(col("dfh") > GroupB)
       .select(col("h"), ceil(col("dfh") / GroupB.toDouble).cast("int").as("g"))

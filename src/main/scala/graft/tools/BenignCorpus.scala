@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * opposite regime from the template-heavy sf* documents fixture: LSH
   * buckets stay shallow, so the derived hot-bucket cutoff should keep
   * the whole corpus in the banding layer (DedupHotBucketSpec pins the
-  * small-scale version; `graft.tools.HotFraction` measures it here).
+  * small-scale version; BASELINE.md R7/R12 ledger the measured hot
+  * fraction here).
   * Everything is expression-space — `spark.range` + hash arithmetic, no
   * driver loops, no rand() — so the corpus is deterministic and the
   * generator itself scales.

@@ -114,12 +114,6 @@ object FaultInject {
     // multi-node discipline: executor-resident checkpoint blocks die
     // with the executor; route materialize through shared storage
     spark.conf.set("graft.materialize", "reliable")
-    // pin the salt width: the salted cell's 1500-doc clique crosses the
-    // threshold only because 1500 > 1024, and a leftover
-    // SPARK_GRAFT_GROUPB from a sensitivity sweep (e.g. 2048) would
-    // silently run the UNSALTED path while the JSON still says
-    // cell:"salted" — a fault receipt for a path that never executed
-    spark.conf.set("graft.dedup.groupB", "1024")
 
     val removed = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

@@ -3,6 +3,7 @@ package graft.tools
 import graft.core.Materialize.MatOps
 import graft.Session
 import graft.operators.GraphOps
+import graft.progress.ProgressListener
 import org.apache.spark.sql.functions._
 
 /** Decade-scale evidence for the graph family on a graph whose EDGE
@@ -65,14 +66,10 @@ object GraphScaleBench {
     val zipf = args.length > 2 && args(2) == "zipf"
     val spark = Session.get("graft-graphscale")
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STAGESTATS=1: per-stage breakdown after the run (the
-    // TimeQuery hook, here to attribute fixture-shape premiums — e.g.
-    // the Zipf hub's LPA term — to a named stage, not a guess)
-    val stats = if (sys.env.contains("SPARK_GRAFT_STAGESTATS")) {
-      val l = new StageStats
-      spark.sparkContext.addSparkListener(l)
-      Some(l)
-    } else None
+    // per-stage breakdown after each timed body, to attribute
+    // fixture-shape premiums (e.g. the Zipf hub's LPA term) to a named
+    // stage, not a guess
+    val stats = ProgressListener.attach(spark)
 
     val stubs =
       if (zipf) {
@@ -109,12 +106,12 @@ object GraphScaleBench {
     def timed(name: String)(body: => Long): Unit = {
       // drain the async bus on both sides of the timed body so a prior
       // operator's tail events can't leak into this one's attribution
-      stats.foreach { l => l.drain(spark); l.reset() }
+      stats.drain(spark); stats.reset()
       val t0 = System.nanoTime()
       val rows = body
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"""{"metric":"graphscale_$name","nodes":$n,"edges":$m,"rows":$rows,"total_sec":$sec%.2f,"ns_per_edge":${sec * 1e9 / m}%.1f}""")
-      stats.foreach { l => l.drain(spark); println(s"[stagestats] $name:"); l.report() }
+      stats.drain(spark); println(s"[stagestats] $name:"); stats.report()
     }
 
     if (which == "lpa" || which == "both")

@@ -1,6 +1,11 @@
 package graft
 
 import graft.operators.DedupOps
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Connected components: the alt-star doubling path vs min-label
@@ -71,5 +76,57 @@ class DedupCCSpec extends AnyFunSuite {
       edges, maxRounds = 100, crossoverAfter = 100))
     val viaStar = labels(DedupOps.connectedComponentsAltStar(edges))
     assert(viaStar == viaProp)
+  }
+
+  /** Every node of an executed plan, looking inside adaptive plans and
+    * query stages; a reused exchange is a leaf. */
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+    case s: QueryStageExec => allNodes(s.plan)
+    case _: ReusedExchangeExec => Nil
+    case _ => p.children.flatMap(allNodes)
+  })
+
+  /** The nodes one exchange's map side runs: down to the next exchange. */
+  private def mapSide(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case _: Exchange | _: QueryStageExec | _: ReusedExchangeExec => Nil
+    case _ => p.children.flatMap(mapSide)
+  })
+
+  private def feedsUnion(e: SparkPlan): Boolean =
+    mapSide(e.children.head).exists(_.isInstanceOf[UnionExec])
+
+  test("the fused hop+jump round shuffles its union once and reuses it") {
+    // executed plans of every localCheckpoint the CC loop runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val capture = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // NULLABLE id columns, as every parquet-read pair graph has: the
+    // jump join's inferred isnotnull(node) only reaches (and diverges)
+    // one side's union subtree when the ids can be null at all
+    val rnd = new scala.util.Random(7)
+    val edges = Seq.fill(400)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .collect { case (a, b) if a != b => (Option(a), Option(b)) }
+      .toDF("src", "dst")
+    spark.listenerManager.register(capture)
+    try {
+      DedupOps.connectedComponents(edges).count()
+      Bridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(capture)
+    import scala.jdk.CollectionConverters._
+    val round1 = plans.asScala.find(p => allNodes(p).exists(_.isInstanceOf[UnionExec]))
+      .getOrElse(fail(s"no hop+jump materialize among ${plans.size} captured"))
+    val nodes = allNodes(round1)
+    val unionShuffles = nodes.collect {
+      case e: ShuffleExchangeExec if feedsUnion(e) => e }
+    val reused = nodes.collect {
+      case r: ReusedExchangeExec if feedsUnion(r.child) => r }
+    assert(unionShuffles.size == 1,
+      s"the union input must be shuffled exactly once:\n$round1")
+    assert(reused.nonEmpty,
+      s"the other join side must reuse the union shuffle:\n$round1")
   }
 }

@@ -14,10 +14,7 @@ class ProgressListenerSpec extends AnyFunSuite {
     val l = ProgressListener.attach(spark)
     spark.range(1000).selectExpr("id % 7 AS k", "id AS v")
       .groupBy("k").count().collect()
-    // listener bus is async; poll until the terminal events drain
-    val deadline = System.currentTimeMillis() + 30000
-    while (l.jobCounts._2 < 1 && System.currentTimeMillis() < deadline)
-      Thread.sleep(100)
+    l.drain(spark)
 
     val snap = l.snapshot()
     assert(snap.nonEmpty)
@@ -34,10 +31,7 @@ class ProgressListenerSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_ingest").toString
     spark.range(5000).selectExpr("id", "id * 2 AS v")
       .write.mode("overwrite").parquet(dir)
-
-    val deadline = System.currentTimeMillis() + 30000
-    while (l.ingest().recordsWritten < 5000 &&
-      System.currentTimeMillis() < deadline) Thread.sleep(100)
+    l.drain(spark)
 
     val io = l.ingest()
     assert(io.recordsWritten == 5000L)
@@ -49,38 +43,44 @@ class ProgressListenerSpec extends AnyFunSuite {
     assert(io.percentOf(size) >= 99.0)
     assert(io.percentOf(0) == 100.0)
   }
-}
 
-/** Scan-riding audit metrics: observations produce the v01-class counters
-  * without a second pass, captured via the listener manager. */
-class QueryMetricsSpec extends org.scalatest.funsuite.AnyFunSuite {
-  import graft.progress.QueryMetrics
-  import org.apache.spark.sql.functions._
+  test("stage records carry task metrics; drain and reset bound a report") {
+    val l = ProgressListener.attach(spark)
+    val sc = spark.sparkContext
+    val tag = "progress-listener-spec"
+    sc.addJobTag(tag)
+    try spark.range(2000).selectExpr("id % 5 AS k")
+      .groupBy("k").count().collect()
+    finally sc.removeJobTag(tag)
+    l.drain(spark)
 
-  lazy val spark = Session.builder("graft-test").master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4").getOrCreate()
+    val recs = l.stageRecords()
+    assert(recs.size >= 2, s"expected a map and a result stage: $recs")
+    recs.values.foreach { r =>
+      assert(r.total > 0 && r.done == r.total && r.failed == 0,
+        s"incomplete stage: $r")
+      assert(r.maxTaskMs <= r.taskMs)
+    }
+    assert(recs.values.map(_.shuffleWriteB).sum > 0,
+      s"no stage wrote shuffle bytes: $recs")
+    val (active, completed, failed) = l.jobCounts
+    assert(active == 0 && failed == 0)
+    assert(completed == sc.statusTracker.getJobIdsForTag(tag).length)
 
-  test("observed metrics ride the query and match a direct audit pass") {
-    val collector = new QueryMetrics.MetricsCollector
-    spark.listenerManager.register(collector)
-    try {
-      val docs = Tables.df(spark, "/root/testdata/sf0.001", "documents")
-      val audited = QueryMetrics.observed(docs, "docs_audit",
-        count(lit(1)).as("rows"),
-        sum(when(col("lang").isNull, 1L).otherwise(0L)).as("null_lang"),
-        sum(when(col("n_chars") <= 0, 1L).otherwise(0L)).as("empty_docs"))
-      // the pipeline's own job: a grouped count (audit adds no job)
-      val grouped = audited.groupBy("lang").count().collect()
-      assert(grouped.nonEmpty)
+    def printed(): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out)(l.report())
+      out.toString("UTF-8")
+    }
+    val before = printed()
+    recs.keys.foreach(id => assert(before.contains(f"[stagestats] $id%5d ")))
+    assert(before.contains(s"TOTAL stages=${recs.size} "))
 
-      val deadline = System.currentTimeMillis() + 30000
-      while (collector.get("docs_audit").isEmpty
-        && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      val m = collector.get("docs_audit").get
-      val n = docs.count()
-      assert(m("rows") == n)
-      assert(m("null_lang") == 0L)
-      assert(m("empty_docs") == 0L)
-    } finally spark.listenerManager.unregister(collector)
+    l.reset()
+    assert(l.stageRecords().isEmpty && l.snapshot().isEmpty)
+    val after = printed().linesIterator.toSeq
+    // header + totals line, no stage rows
+    assert(after.size == 2, after.mkString("\n"))
+    assert(after.last.contains("TOTAL stages=0 "))
   }
 }
