@@ -115,19 +115,4 @@ object Sinks {
       n
     }
   }
-
-  /** Write `{"k": v, ...}` as one JSON object; returns the entry count. */
-  def writeJsonObject[K, V](path: String, it: Iterator[(K, V)]): Long = {
-    val sink = new JsonObjectSink(path)
-    it.foreach { case (k, v) => sink.write(k, v) }
-    sink.close()
-  }
-
-  /** Write the unsorted TSV format; returns the entry count. */
-  def writeTsvWithCount[K, V](path: String, it: Iterator[(K, V)],
-      suffix: String): Long = {
-    val sink = new TsvCountSink(path, suffix)
-    it.foreach { case (k, v) => sink.write(k, v) }
-    sink.close()
-  }
 }

@@ -175,7 +175,8 @@ object DedupOps {
   }
 
   private[graft] def nearDupPairs(s: SparkSession, dir: String,
-      threshold: Double = 0.9, maxBucket: Int = 0): DataFrame = {
+      threshold: Double = 0.9, maxBucket: Int = 0,
+      verifyBroadcast: Option[Boolean] = None): DataFrame = {
     val (perDoc0, numBands) = lshDocFrame(s, dir, threshold)
     // materialized ONCE (EAGER localCheckpoint): the per-doc frame
     // feeds hot-bucket detection, both sides of the candidate
@@ -279,9 +280,11 @@ object DedupOps {
     // exact verify on candidates only, over sorted-long word sets; hot
     // docs' mutual pairs come from the exact kernel (disjoint from the
     // cold set by the both-hot filter above, so a plain union)
-    exactVerify(sets, cand, threshold, est = Some(estOf(estM)))
+    exactVerify(sets, cand, threshold, est = Some(estOf(estM)),
+      verifyBroadcast = verifyBroadcast)
       .unionAll(prefixFilterPairsOn(
-        sets.join(hotDocs, Seq("doc_id"), "left_semi"), threshold))
+        sets.join(hotDocs, Seq("doc_id"), "left_semi"), threshold,
+        verifyBroadcast))
   }
 
   /** Hot-bucket cutoff from the measured bucket-load histogram: the
@@ -340,50 +343,29 @@ object DedupOps {
   // miss B — one more miss proves J < t, and a non-(−1) return is the
   // EXACT intersection, so the surviving pairs' jac is bit-identical
   // to the unbudgeted division.
-  /** Test override for [[exactVerify]]'s broadcast decision (specs pin
-    * the forced shuffle-hash plan). */
-  @volatile private[graft] var verifyBcOverride: Option[Boolean] = None
-
-  /** TEST-ONLY ablation knobs (SaltedPlanGuardSpec). The salted kernels'
-    * scale behavior rests on plan pieces whose absence changes no OUTPUT
-    * — explicit-width repartitions (AQE would byte-coalesce the tiny
-    * candidate rows to ~1 task and fuse the enumeration onto it) and
-    * the hot-token broadcast (a shuffled attach would re-shuffle the
-    * corpus-scale side) — so output specs cannot guard them. Flipping a
-    * knob removes the corresponding piece, letting the plan-guard spec
-    * prove its assertions FAIL without it (a guard that cannot bite
-    * guards nothing). Deliberately `private[graft]` vars, NOT session
-    * confs (the `verifyBcOverride` pattern): a user-settable conf would
-    * let one stray `SET graft.ablate…` in a sweep script silently
-    * restore the 361 s single-task sf10 shape with byte-identical
-    * output — the exact failure class the guards exist to prevent. */
-  @volatile private[graft] var ablateExplicitWidth: Boolean = false
-  @volatile private[graft] var ablateBroadcastHot: Boolean = false
-
   /** Salt width for hot posting lists (docs per group). 1024 bounds a
     * task's enumeration at ~GroupB² ≈ 1M pairs (~1 s of verify-shaped
     * work) while keeping the replication overhead ≈ candidates/GroupB —
     * two orders below the enumeration it spreads; it is the measured
     * plateau point of the sf10 sensitivity sweep (BASELINE ledger). */
   private val GroupB = 1024
-  private def widen(df: DataFrame, n: Int, keys: Column*): DataFrame =
-    if (ablateExplicitWidth) df else df.repartition(n, keys: _*)
   /** The [[exactVerify]] broadcast-guard estimate (row count, Σ|hs|) as
     * observation metrics, to ride a sets-frame materialize action. */
   private val setsEstMetrics = Seq(count(lit(1)).as("est_n"),
     coalesce(sum(size(col("hs"))), lit(0L)).as("est_e"))
   private def estOf(m: Map[String, Any]): (Long, Long) =
     (m("est_n").asInstanceOf[Long], m("est_e").asInstanceOf[Long])
-  private def bcastHot(df: DataFrame): DataFrame =
-    if (ablateBroadcastHot) df else broadcast(df)
 
   /** `est`, when given, is the (row count, Σ|hs|) of `sets`, observed on
     * the caller's materialize action (guide §2.6) — the broadcast-size
     * guard below then costs NO scheduled job at all. Every caller has
     * such a materialize, so the in-function fallback aggregate only runs
-    * for future call sites that cannot provide it. */
+    * for future call sites that cannot provide it. `verifyBroadcast`
+    * forces the broadcast decision (specs pin the shuffle-hash plan with
+    * `Some(false)`); `None` derives it from the size guard. */
   private def exactVerify(sets: DataFrame, cand: DataFrame,
-      threshold: Double, est: Option[(Long, Long)] = None): DataFrame = {
+      threshold: Double, est: Option[(Long, Long)] = None,
+      verifyBroadcast: Option[Boolean] = None): DataFrame = {
     // The array attaches are the kernel's byte hog at scale: as SMJs,
     // each ships the full candidate frame again, the second time with a
     // ~1.2 KB array on every row — ≈140 GB shuffled+sorted at sf10's
@@ -400,10 +382,10 @@ object DedupOps {
     // and cap at the lower of a fixed budget and a fraction of the
     // live driver heap (TWO copies broadcast: the doc_a and doc_b
     // aliases).
-    // Resolve the override FIRST: the count+sum estimation is itself a
-    // Spark job over the sets frame, and a forced run must not pay that
-    // wasted pass.
-    val bc = verifyBcOverride.getOrElse {
+    // Resolve the forced decision FIRST: the count+sum estimation is
+    // itself a Spark job over the sets frame, and a forced run must not
+    // pay that wasted pass.
+    val bc = verifyBroadcast.getOrElse {
       val (n, e) = est.getOrElse {
         val st = sets.agg(count(lit(1)).as("n"),
           coalesce(sum(size(col("hs"))), lit(0L)).as("e")).head()
@@ -1060,7 +1042,18 @@ object DedupOps {
     * stays: propagation's convergence argument is empirical per corpus,
     * the doubling algorithm's is a theorem. */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50,
-      crossoverAfter: Int = 8, symAdj: Option[DataFrame] = None): DataFrame = {
+      crossoverAfter: Int = 8, symAdj: Option[DataFrame] = None): DataFrame =
+    propagateLabels(edges, maxRounds, crossoverAfter, symAdj).map(_._1)
+      .getOrElse(connectedComponentsAltStar(edges, maxRounds))
+
+  /** The min-label propagation loop of [[connectedComponents]]:
+    * `Some((labels, rounds))` when it converged within
+    * min(maxRounds, crossoverAfter) hop+jump rounds, `None` when that
+    * budget ran out (the caller then falls back to alt-star). The round
+    * count pins the pointer jump's O(log diameter) claim (DedupCCSpec). */
+  private[graft] def propagateLabels(edges: DataFrame, maxRounds: Int = 50,
+      crossoverAfter: Int = 8, symAdj: Option[DataFrame] = None)
+      : Option[(DataFrame, Int)] = {
     // materialize the (usually expensive) edge plan ONCE — without this
     // every round's join re-runs the upstream pipeline that produced the
     // pairs (for dedup graphs: the whole prefix-filter + verify kernel),
@@ -1179,18 +1172,8 @@ object DedupOps {
       labels = next
       round += 1
     }
-    // test observability (DedupCCSpec): rounds the propagation loop ran
-    // when it converged itself, -1 when the alt-star fallback took over
-    // — the pointer-jump's O(log diameter) claim is pinned on this.
-    lastPropagationRounds = if (changed) -1 else round
-    if (changed) connectedComponentsAltStar(edges, maxRounds)
-    else labels
+    if (changed) None else Some((labels, round))
   }
-
-  /** See [[connectedComponents]]: diagnostic round count of the last
-    * propagation run on this thread's ordering (tests only — benches and
-    * queries never read it). */
-  @volatile private[graft] var lastPropagationRounds: Int = -1
 
   /** Connected components by alternating large-star / small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -1388,7 +1371,7 @@ object DedupOps {
     val hotR = pref0.groupBy("r").agg(count(lit(1)).as("dfr"))
       .filter(col("dfr") > GroupB)
       .select(col("r"), ceil(col("dfr") / GroupB.toDouble).cast("int").as("g"))
-    val prefG = pref0.join(bcastHot(hotR), Seq("r"), "left")
+    val prefG = pref0.join(broadcast(hotR), Seq("r"), "left")
       .withColumn("g", coalesce(col("g"), lit(1)))
       .withColumn("grp", pmod(xxhash64(col("doc_id")), col("g")).cast("int"))
     // The explicit-N repartition on the (salted) join key is load-bearing
@@ -1404,14 +1387,12 @@ object DedupOps {
     // sub-second scan of the just-checkpointed blocks. (The two sides
     // differ post-salt, so this is two small exchanges where the
     // unsalted shape reused one.)
-    val pref = widen(
-      prefG.withColumn("gy", explode(expr("sequence(grp, g - 1)")))
-        .withColumnRenamed("grp", "gx"),
-      nPart, col("r"), col("gx"), col("gy"))
-    val prefY = widen(
-      prefG.withColumn("gx", explode(expr("sequence(0, grp)")))
-        .withColumnRenamed("grp", "gy"),
-      nPart, col("r"), col("gx"), col("gy"))
+    val pref = prefG.withColumn("gy", explode(expr("sequence(grp, g - 1)")))
+      .withColumnRenamed("grp", "gx")
+      .repartition(nPart, col("r"), col("gx"), col("gy"))
+    val prefY = prefG.withColumn("gx", explode(expr("sequence(0, grp)")))
+      .withColumnRenamed("grp", "gy")
+      .repartition(nPart, col("r"), col("gx"), col("gy"))
     // Conjunct order is the hot-loop budget: the size and POSITIONAL
     // bounds are integer compares and kill the overwhelming majority of
     // enumerated rows before the first_common array merge runs (codegen
@@ -1538,49 +1519,58 @@ object DedupOps {
     val key = (s.sparkContext.applicationId, fp, threshold)
     val table = adjMemo.getOrElseUpdate(key, {
       val name = s"graft_adj_${fp.take(12)}_${(threshold * 100).round}"
-      // the warehouse DIRECTORY outlives the in-memory catalog: a table
-      // written by a previous application leaves its location on disk
-      // while the fresh catalog has no entry, and saveAsTable then fails
-      // with LOCATION_ALREADY_EXISTS — drop any catalog entry and delete
-      // the stale location first (idempotent; the memo already guards
-      // same-application reuse)
-      s.sql(s"DROP TABLE IF EXISTS `$name`")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(name)))
-      val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val pairs = sharedPairGraph(s, dir, threshold)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      val m = pairs.count()
-      // core-count floor via defaultNumShufflePartitions (= the
-      // shuffle.partitions conf), not numShufflePartitions, which under
-      // AQE is the 8×-cores initialPartitionNum — 256 buckets at bench
-      // SF made every CC-round stage 256 near-empty tasks (r16 audit)
-      val nBuckets = math.min(4096L, math.max(
-        s.sessionState.conf.defaultNumShufflePartitions.toLong,
-        2 * m / 50000L)).toInt
-      val sym = pairs.union(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-      // pre-shuffle on the bucket key so each task owns whole buckets
-      // (one file per bucket, not one per task×bucket)
-      sym.repartition(nBuckets, col("src"))
-        .write.mode("overwrite").bucketBy(nBuckets, "src").sortBy("src")
-        .saveAsTable(name)
+      writeBucketedAdjacency(s, name, sharedPairGraph(s, dir, threshold)
+        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
       name
     })
     s.table(table)
   }
 
+  /** Writes the undirected edge list `pairs` (src, dst) symmetrized as
+    * table `name`, BUCKETED AND SORTED on `src`: the table
+    * [[sharedAdjacency]] persists, and the one GraphScaleBench's
+    * bucketed modes time. Returns the bucket count. */
+  private[graft] def writeBucketedAdjacency(s: SparkSession, name: String,
+      pairs: DataFrame): Int = {
+    // the warehouse DIRECTORY outlives the in-memory catalog: a table
+    // written by a previous application leaves its location on disk
+    // while the fresh catalog has no entry, and saveAsTable then fails
+    // with LOCATION_ALREADY_EXISTS — drop any catalog entry and delete
+    // the stale location first (idempotent; sharedAdjacency's memo
+    // guards same-application reuse)
+    s.sql(s"DROP TABLE IF EXISTS `$name`")
+    val loc = new org.apache.hadoop.fs.Path(
+      s.sessionState.catalog.defaultTablePath(
+        org.apache.spark.sql.catalyst.TableIdentifier(name)))
+    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
+    val m = pairs.count()
+    // core-count floor via defaultNumShufflePartitions (= the
+    // shuffle.partitions conf), not numShufflePartitions, which under
+    // AQE is the 8×-cores initialPartitionNum — 256 buckets at bench
+    // SF made every CC-round stage 256 near-empty tasks (r16 audit)
+    val nBuckets = math.min(4096L, math.max(
+      s.sessionState.conf.defaultNumShufflePartitions.toLong,
+      2 * m / 50000L)).toInt
+    val sym = pairs.union(
+      pairs.select(col("dst").as("src"), col("src").as("dst")))
+    // pre-shuffle on the bucket key so each task owns whole buckets
+    // (one file per bucket, not one per task×bucket)
+    sym.repartition(nBuckets, col("src"))
+      .write.mode("overwrite").bucketBy(nBuckets, "src").sortBy("src")
+      .saveAsTable(name)
+    nBuckets
+  }
+
   private[graft] def prefixFilterPairsOn(sets0: DataFrame,
-      threshold: Double): DataFrame = {
+      threshold: Double, verifyBroadcast: Option[Boolean] = None): DataFrame = {
     // sets feeds three consumers (prefix build + both verify sides) —
     // materialize once, the d09/containment discipline; exactVerify's
     // broadcast-size guard rides this action as an observation (was a
     // separately scheduled aggregate job, guide §2.6)
     val (sets, m) = Materialize.observed(sets0, "sets", setsEstMetrics)
     exactVerify(sets, prefixCandidatesOn(sets, threshold), threshold,
-      est = Some(estOf(m)))
+      est = Some(estOf(m)), verifyBroadcast = verifyBroadcast)
   }
 
   val d07 = Q("d07_allpairs_jaccard",
@@ -1831,11 +1821,11 @@ object DedupOps {
     val hotH = tok.groupBy("h").agg(count(lit(1)).as("dfh"))
       .filter(col("dfh") > GroupB)
       .select(col("h"), ceil(col("dfh") / GroupB.toDouble).cast("int").as("g"))
-    val tokG = tok.join(bcastHot(hotH), Seq("h"), "left")
+    val tokG = tok.join(broadcast(hotH), Seq("h"), "left")
       .withColumn("grp", coalesce(
         pmod(xxhash64(col("doc_id")), col("g")).cast("int"), lit(0)))
       .drop("g")
-    val prefG = pref.join(bcastHot(hotH), Seq("h"), "left")
+    val prefG = pref.join(broadcast(hotH), Seq("h"), "left")
       .withColumn("grp", explode(expr("sequence(0, coalesce(g, 1) - 1)")))
       .drop("g")
     // Explicit-width repartition ON THE GROUPBY KEYS before the
@@ -1856,8 +1846,8 @@ object DedupOps {
     // rows are 24 B too, AQE coalesces their exchanges to a few tasks,
     // and the enumeration explosion runs fused on those (the remaining
     // single 21 s task after only the agg was widened).
-    widen(prefG, wide, col("h"), col("grp")).alias("x")
-      .join(widen(tokG, wide, col("h"), col("grp")).alias("y"),
+    prefG.repartition(wide, col("h"), col("grp")).alias("x")
+      .join(tokG.repartition(wide, col("h"), col("grp")).alias("y"),
         Seq("h", "grp"))
       .filter(col("x.doc_id") =!= col("y.doc_id") &&
         col("y.sz") >= col("x.sz") * threshold - 1e-9 &&
@@ -1867,7 +1857,7 @@ object DedupOps {
         lit(1) + col("y.sz") - col("y.pos") >=
           ceil(col("x.sz") * threshold - 1e-9))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .transform(widen(_, wide, col("doc_a"), col("doc_b")))
+      .repartition(wide, col("doc_a"), col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared_prefix"))
   }

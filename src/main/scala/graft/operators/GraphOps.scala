@@ -28,7 +28,7 @@ object GraphOps {
     * formulation of the classic MapReduce triangle count (Suri &
     * Vassilvitskii, WWW'11). Wedge fan-out at a vertex of degree d is
     * O(d²), so a power-law hub dominates the wedge stage — this form is
-    * the ground-truth twin; [[triangleCountDegreeOrdered]] is the scale
+    * the ground-truth twin; [[triangleCountAdjIntersect]] is the scale
     * path. Both joins are plain equi-joins: wedge generation shuffles by
     * the middle vertex, closure by the (a, c) pair. */
   def triangleCount(edges: DataFrame): DataFrame = {
@@ -44,16 +44,10 @@ object GraphOps {
   /** Each edge oriented from its lower-(degree, id) endpoint: columns
     * (src, dst, deg_dst). Every vertex's OUT-degree is then bounded by
     * O(√m) regardless of its real degree — the Suri & Vassilvitskii
-    * ordering that tames power-law hubs. */
-  def degreeOriented(edges: DataFrame): DataFrame = {
-    val e = canonical(edges)
-    val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy("v").agg(count(lit(1)).as("deg"))
-    orientByDegree(e, deg)
-  }
-
-  /** [[degreeOriented]] fed from a pre-symmetrized adjacency BUCKETED on
-    * `src` (DedupOps.sharedAdjacency): each node's degree is its out-row
+    * ordering that tames power-law hubs.
+    *
+    * Fed from a pre-symmetrized adjacency BUCKETED on `src`
+    * (DedupOps.sharedAdjacency): each node's degree is its out-row
     * count in the symmetric frame, so the degree aggregate runs with
     * ZERO Exchange on the bucketed scan, and the canonical edge list is
     * the same scan filtered to src < dst — whose join back to the
@@ -77,73 +71,12 @@ object GraphOps {
         when(lowerA, col("deg_b")).otherwise(col("deg_a")).as("deg_dst"))
   }
 
-  /** Triangle count over degree-oriented edges: each triangle is found
-    * exactly once at its lowest-(degree, id) vertex — the only vertex
-    * with out-edges to both others. Wedges per vertex are C(outdeg, 2)
-    * with outdeg ≤ O(√m), so a degree-10⁶ hub that generates ~10¹²
-    * wedges in the canonical form generates ZERO here (all its edges
-    * point outward-in); the wedge stage shrinks from Σ deg(v)² to
-    * O(m^1.5) total. Same two-equi-join shape, same shuffles, no new
-    * operator — just a better orientation. */
-  def triangleCountDegreeOrdered(edges: DataFrame,
-      adj: Option[DataFrame] = None): DataFrame = {
-    // materialize the oriented edge frame ONCE: it feeds both wedge
-    // sides and the closure join, and `degreeOriented` itself reads its
-    // input twice (degree agg + join) — without this each of the ~4
-    // consumers re-runs whatever pipeline produced the edges (for g01:
-    // the whole near-dup pair kernel; measured 150 s → ~8 s at sf0.1)
-    // EAGER checkpoints (the d02 race lesson): `o` feeds both wedge
-    // sides AND the closure join in parallel stages of one action.
-    // The explicit-N repartition on the wedge apex is load-bearing: the
-    // oriented edge frame is only a few MB, so AQE coalesces its
-    // shuffle to a couple of partitions — but the wedge join EXPLODES
-    // (Σ C(outdeg, 2) rows ≫ edges; dense dedup cliques make it ~50×
-    // the edge count at sf0.1), and the explosion runs in the join
-    // stage, on however many tasks own the apex partitions. Pinning
-    // hash(src, N) keeps all cores on the explosion and co-partitions
-    // both join sides. N scales with the edge count (~50k edges →
-    // ~2.5M wedge rows per task), floored at `shuffle.partitions` so
-    // small graphs still use every core — a fixed N = cores made the
-    // sf1.0 wedge stage run 32-wide over a ~500M-row explosion.
-    // with a bucketed adjacency the edge frame is a storage scan (its
-    // own materialization) and the degree stage is exchange-free — see
-    // [[degreeOrientedFromAdj]]; otherwise materialize the edge plan
-    val (oriented, m) = adj match {
-      case Some(a) => (degreeOrientedFromAdj(a), a.count() / 2)
-      case None =>
-        val e = edges.materialize
-        (degreeOriented(e), e.count())
-    }
-    val conf = edges.sparkSession.sessionState.conf
-    val nPart = math.min(4096L,
-      // core-count floor: defaultNumShufflePartitions IS the
-      // shuffle.partitions conf; numShufflePartitions under AQE is the
-      // 8×-cores initialPartitionNum (r16 audit, see prefixCandidatesOn)
-      math.max(conf.defaultNumShufflePartitions.toLong, m / 50000L)).toInt
-    val o = oriented
-      .repartition(nPart, col("src")).materialize
-    val rankLt = col("x.deg_dst") < col("y.deg_dst") ||
-      (col("x.deg_dst") === col("y.deg_dst") && col("x.dst") < col("y.dst"))
-    val wedges = o.alias("x")
-      .join(o.alias("y"), col("x.src") === col("y.src"))
-      .filter(rankLt) // each out-neighbor pair once, lower rank first
-      .select(col("x.dst").as("src"), col("y.dst").as("dst"))
-    // the closing edge v—w is oriented v→w exactly because rank(v)<rank(w)
-    wedges.join(o.select("src", "dst"), Seq("src", "dst"))
-      .agg(count(lit(1)).as("n_triangles"))
-  }
-
   // ---------------------------------------------------------------- g01
-  /** Triangle count of the ≥0.9-Jaccard near-dup graph — a structure
-    * probe for dedup clusters (near-cliques are triangle-dense; chains
-    * of borderline pairs are not). The pair graph rides the d07 prefix
-    * kernel (same exact verified pair set as the LSH path, completeness
-    * guaranteed, ~7× cheaper on this corpus — the d06 decision).
-    * Oracle: DuckDB closes the same wedges over the quadratic exact
-    * pair set. */
+  private val BcMaxAdjBytes = 1500000000L
+
   /** Triangle count via PER-EDGE sorted-neighborhood intersection —
-    * the shuffle-free successor to [[triangleCountDegreeOrdered]]'s
-    * wedge join. Same degree orientation (each triangle counted once,
+    * the shuffle-free successor to the Suri & Vassilvitskii wedge join.
+    * Same degree orientation (each triangle counted once,
     * at its lowest-rank vertex: for oriented edge u→v the common
     * out-neighbors N⁺(u)∩N⁺(v) are exactly the triangles closed over
     * that edge), but the Σ C(outdeg,2) wedge EXPLOSION never becomes
@@ -158,12 +91,11 @@ object GraphOps {
     * longs — the orientation bounds every array at O(√m)) broadcasts
     * when small (both attaches ride ONE broadcast: scan → BHJ → BHJ →
     * merge → partial agg, zero wide shuffles — 639 → 9.5 s at sf1.0);
-    * past `bcMaxAdjBytes` (estimated) it degrades to two equi-joins
+    * past `BcMaxAdjBytes` (estimated) it degrades to two equi-joins
     * whose fat side is the same bytes the wedge shuffle moved, minus
     * the 50×-row overhead and the sort — the 100 TB fallback. */
   def triangleCountAdjIntersect(adj: DataFrame,
-      broadcastNbr: Option[Boolean] = None,
-      bcMaxAdjBytes: Long = 1500000000L): DataFrame = {
+      broadcastNbr: Option[Boolean] = None): DataFrame = {
     val o = degreeOrientedFromAdj(adj).materialize
     val nbr0 = o.groupBy("src")
       .agg(sort_array(collect_list(col("dst"))).as("ns")).materialize
@@ -178,7 +110,7 @@ object GraphOps {
     // is the lower of a fixed budget and an eighth of the actual heap
     // (a session launched without run.sh's 48g default must not be
     // pushed over by a guard tuned for it).
-    val bcBudget = math.min(bcMaxAdjBytes, Runtime.getRuntime.maxMemory / 8)
+    val bcBudget = math.min(BcMaxAdjBytes, Runtime.getRuntime.maxMemory / 8)
     val estBytes = adj.count() / 2 * 8L + nbr0.count() * 48L
     val bc = broadcastNbr.getOrElse(estBytes <= bcBudget)
     // Fallback attaches are SHUFFLE_HASH, not SMJ: the per-vertex array
@@ -196,6 +128,13 @@ object GraphOps {
       .agg(coalesce(sum("c"), lit(0L)).as("n_triangles"))
   }
 
+  /** Triangle count of the ≥0.9-Jaccard near-dup graph — a structure
+    * probe for dedup clusters (near-cliques are triangle-dense; chains
+    * of borderline pairs are not). The pair graph rides the d07 prefix
+    * kernel (same exact verified pair set as the LSH path, completeness
+    * guaranteed, ~7× cheaper on this corpus — the d06 decision).
+    * Oracle: DuckDB closes the same wedges over the quadratic exact
+    * pair set. */
   val g01 = Q("g01_neardup_triangles",
     (s, dir) =>
       triangleCountAdjIntersect(DedupOps.sharedAdjacency(s, dir)),

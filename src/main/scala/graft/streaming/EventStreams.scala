@@ -424,22 +424,6 @@ object EventStreams {
     * already in the target is a completed replay — skipped. Idempotent
     * merges (key upsert) may pass None and tolerate replays by
     * construction. */
-  /** TEST-ONLY crash injection ([[graft.tools.FaultInject]] streamdriver
-    * mode): when ≥ 0, the first commit with `batchId >= ` this value that
-    * deletes an existing target halts the JVM (`Runtime.halt` — no
-    * shutdown hooks, no cleanup) right inside the delete-vs-rename window
-    * that the recovery branch claims to survive. A `private[graft]` var,
-    * not a conf, for the same reason as DedupOps' ablation knobs: a
-    * settable conf could crash a production stream. */
-  @volatile private[graft] var crashAfterDeleteAtBatch: Long = -1L
-  /** Count of staging-without-target adoptions (the crash-recovery
-    * branch) — lets the fault tool PROVE the restart actually exercised
-    * recovery rather than just replaying from the checkpoint. */
-  @volatile private[graft] var stagingRecoveries: Long = 0L
-  /** Count of marker-skipped replayed batches (the additive-merge
-    * double-count defense) — same observability purpose. */
-  @volatile private[graft] var replaysSkipped: Long = 0L
-
   private[graft] def swapSnapshot(spark: SparkSession, tablePath: String,
       batchId: Option[Long] = None)(
       merge: Option[DataFrame] => DataFrame): Unit = {
@@ -452,10 +436,8 @@ object EventStreams {
     // crash recovery: staging-without-target means a previous run died
     // between delete and rename, and staging holds the complete merged
     // snapshot — finish its swap instead of silently restarting empty
-    if (fs.exists(staging) && !fs.exists(target)) {
-      stagingRecoveries += 1
-      fs.rename(staging, target)
-    } else if (fs.exists(staging)) fs.delete(staging, true)
+    if (fs.exists(staging) && !fs.exists(target)) fs.rename(staging, target)
+    else if (fs.exists(staging)) fs.delete(staging, true)
     def committedId(dir: org.apache.hadoop.fs.Path): Option[Long] = {
       val m = new org.apache.hadoop.fs.Path(dir, "_graft_batchid")
       if (!fs.exists(m)) None
@@ -491,22 +473,10 @@ object EventStreams {
           new org.apache.hadoop.fs.Path(staging, "_graft_batchid"), true)
         try out.writeLong(id) finally out.close()
       }
-      if (fs.exists(target)) {
-        fs.delete(target, true)
-        if (crashAfterDeleteAtBatch >= 0 &&
-            batchId.exists(_ >= crashAfterDeleteAtBatch)) {
-          // fault injection lands HERE — the exact torn state the
-          // recovery branch above adopts: staging holds the complete
-          // merged snapshot (+ marker), target is gone
-          System.err.println(s"[swap] CRASH-INJECT after delete of " +
-            s"$tablePath at ${System.currentTimeMillis()} (batch " +
-            s"${batchId.getOrElse(-1L)})")
-          Runtime.getRuntime.halt(137)
-        }
-      }
+      if (fs.exists(target)) fs.delete(target, true)
       require(fs.rename(staging, target),
         s"swapSnapshot: rename failed for $tablePath")
-    } else replaysSkipped += 1
+    }
   }
 
   /** Convenience: stream the events parquet as a file source. */

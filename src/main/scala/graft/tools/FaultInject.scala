@@ -385,15 +385,16 @@ object FaultInject {
 
   /** Driver kill + restart-from-checkpoint: a forked victim JVM runs
     * `rollupStream` and HALTS (SIGKILL-equivalent `Runtime.halt`, via
-    * [[graft.streaming.EventStreams.crashAfterDeleteAtBatch]]) inside
-    * the delete-vs-rename commit window of batch 4 — the exact torn
-    * state `swapSnapshot`'s recovery branch claims to survive. The
-    * parent verifies the torn state ON DISK (staging present, target
-    * absent), restarts a fresh victim from the same checkpoint, and
-    * requires (a) the restart adopted the orphaned staging
-    * (stagingRecoveries ≥ 1 — not merely a checkpoint replay), (b) the
-    * re-delivered batch was marker-skipped, and (c) the final view
-    * fingerprints equal to a one-pass batch recompute. Three passes.
+    * its own [[CrashOnDeleteFs]]) inside the delete-vs-rename commit
+    * window of batch 4 — the exact torn state `swapSnapshot`'s recovery
+    * branch claims to survive. The parent verifies the torn state ON
+    * DISK (staging present, target absent), restarts a fresh victim
+    * from the same checkpoint, and requires the final view to
+    * fingerprint equal to a one-pass batch recompute. That equality
+    * needs both recovery steps: a restart that dropped the orphaned
+    * staging would rebuild the view from batch 4 alone (batches 0–3
+    * lost), and one that re-merged the re-delivered batch 4 instead of
+    * marker-skipping it would count it twice. Three passes.
     *
     * Usage: tools/run.sh graft.tools.FaultInject streamdriver */
   def streamDriverMode(): Unit = {
@@ -430,14 +431,9 @@ object FaultInject {
         !new java.io.File(table).exists()
       // run 2: restart from the same checkpoint, no injection
       val (exit2, out2) = victim(dataDir, table, ckpt, -1L)
-      val recoveries = "\"recoveries\":(\\d+)".r
-        .findFirstMatchIn(out2).map(_.group(1).toLong).getOrElse(-1L)
-      val skipped = out2.contains("\"replaysSkipped\":1")
       val fp = rollupFingerprint(spark.read.parquet(table))
-      val ok = crashed && torn && exit2 == 0 && recoveries >= 1 &&
-        skipped && fp == fpBatch
+      val ok = crashed && torn && exit2 == 0 && fp == fpBatch
       println(s"[driverkill] pass $pass: crashed=$crashed torn=$torn " +
-        s"recoveries=$recoveries replay_skipped=$skipped " +
         s"fp=$fp batch=$fpBatch ok=$ok")
       if (!ok) { // keep the evidence trail on a failure
         System.err.println(s"--- victim 1 output ---\n$out1")
@@ -455,22 +451,61 @@ object FaultInject {
   }
 
   /** Internal: the forked driver-kill victim. Runs `rollupStream` over
-    * the chunked fixture; with `crashAt ≥ 0` the JVM halts inside that
-    * batch's commit window and never returns from processAllAvailable. */
+    * the chunked fixture; with `crashAt ≥ 1` the JVM halts inside that
+    * batch's commit window and never returns from processAllAvailable.
+    * Batch 0 creates the view and every later batch deletes it once
+    * before its rename, so batch `crashAt`'s delete is the view path's
+    * `crashAt`-th. */
   def streamVictim(args: Array[String]): Unit = {
     val Array(_, dataDir, table, ckpt, crashAt) = args.take(5)
-    graft.streaming.EventStreams.crashAfterDeleteAtBatch = crashAt.toLong
-    val spark = Session.builder("graft-streamvictim").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4").getOrCreate()
+    val b = Session.builder("graft-streamvictim").master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+    if (crashAt.toInt >= 1) {
+      CrashOnDeleteFs.arm(new org.apache.hadoop.fs.Path(table), crashAt.toInt)
+      b.config("spark.hadoop.fs.file.impl", classOf[CrashOnDeleteFs].getName)
+        .config("spark.hadoop.fs.file.impl.disable.cache", "true")
+    }
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val q = graft.streaming.EventStreams
       .rollupStream(fileStream(spark, dataDir), table, ckpt)
     q.processAllAvailable()
     q.stop()
-    println(s"""{"victim":"done","recoveries":${
-      graft.streaming.EventStreams.stagingRecoveries},"replaysSkipped":${
-      graft.streaming.EventStreams.replaysSkipped},"batches":${
-      q.recentProgress.length}}""")
+    println(s"""{"victim":"done","batches":${q.recentProgress.length}}""")
     spark.stop()
   }
+}
+
+/** The streamdriver victim's fault: a `file:` filesystem that performs
+  * the armed path's N-th delete and then halts the JVM (`Runtime.halt`
+  * — no shutdown hooks, no cleanup). For the view of a staged-swap
+  * stream that lands inside `swapSnapshot`'s delete-vs-rename window:
+  * staging holds the complete merged snapshot (+ batch marker), the
+  * target is gone. Only the forked victim installs it, through
+  * `spark.hadoop.fs.file.impl` with the FS cache disabled — every
+  * `getFileSystem` then builds a fresh instance, so the armed path and
+  * the delete count live in the companion. */
+final class CrashOnDeleteFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def delete(f: org.apache.hadoop.fs.Path,
+      recursive: Boolean): Boolean = {
+    val done = super.delete(f, recursive)
+    CrashOnDeleteFs.armed.foreach { case (target, n) =>
+      if (makeQualified(f).toUri.getPath == target &&
+          CrashOnDeleteFs.deletes.incrementAndGet() == n) {
+        System.err.println(s"[swap] CRASH-INJECT after delete #$n of " +
+          s"$target at ${System.currentTimeMillis()}")
+        Runtime.getRuntime.halt(137)
+      }
+    }
+    done
+  }
+}
+
+object CrashOnDeleteFs {
+  @volatile private var armed: Option[(String, Int)] = None
+  private val deletes = new AtomicInteger(0)
+
+  /** Halt on the `n`-th delete of `target` in this JVM. */
+  def arm(target: org.apache.hadoop.fs.Path, n: Int): Unit =
+    armed = Some((target.toUri.getPath, n))
 }

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.core.Materialize.MatOps
 import graft.Session
-import graft.operators.GraphOps
+import graft.operators.{DedupOps, GraphOps}
 import graft.progress.ProgressListener
 import org.apache.spark.sql.functions._
 
@@ -48,12 +48,15 @@ import org.apache.spark.sql.functions._
   * them (r10 verdict ask #2). Same determinism contract: pure hash
   * arithmetic in expression space, no rand(), no driver state.
   *
-  * Mode `tri` races the two triangle paths on the same fixture —
-  * [[GraphOps.triangleCountAdjIntersect]] (the live g01 path; per-edge
-  * sorted-merge over degree-ORIENTED out-lists, bounded O(√m) even at a
-  * hub) vs [[GraphOps.triangleCountDegreeOrdered]] (the wedge-join
-  * form) — over the bucketed adjacency, and prints one ledger line per
-  * variant; the BASELINE.md dispatch decision cites these lines.
+  * Mode `tri` times [[GraphOps.triangleCountAdjIntersect]] (the live
+  * g01 path; per-edge sorted-merge over degree-ORIENTED out-lists,
+  * bounded O(√m) even at a hub) over the bucketed adjacency and prints
+  * one ledger line. The retired wedge-join form's `tri_wedgejoin`
+  * lines stay in BASELINE.md as the dispatch decision's receipt.
+  *
+  * Both bucketed modes write the adjacency through
+  * [[graft.operators.DedupOps.writeBucketedAdjacency]], the writer g01
+  * and g04 read from, so the timed table has their bucket count.
   *
   * Usage: tools/run.sh graft.tools.GraphScaleBench <nodes> [lpa|lpab|kcore|tri|both] [zipf]
   */
@@ -114,27 +117,17 @@ object GraphScaleBench {
       stats.drain(spark); println(s"[stagestats] $name:"); stats.report()
     }
 
+    // the g01/g04 storage shape: symmetric adjacency bucketed on src
+    def bucketedAdjacency(name: String): Int =
+      DedupOps.writeBucketedAdjacency(spark, name,
+        edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+
     if (which == "lpa" || which == "both")
       timed("lpa2")(GraphOps.labelPropagation(edges, iterations = 2).count())
     if (which == "lpab") {
-      // bucketed sorted adjacency, the sharedAdjacency write shape
-      // (DedupOps.scala): whole buckets per task, one file per bucket
       val name = s"graphscale_adj_$n"
-      spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(name)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val nBuckets = math.min(4096L, math.max(
-        spark.sessionState.conf.numShufflePartitions.toLong,
-        2 * m / 50000L)).toInt
       val tb0 = System.nanoTime()
-      edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(nBuckets, col("src"))
-        .write.mode("overwrite").bucketBy(nBuckets, "src").sortBy("src")
-        .saveAsTable(name)
+      val nBuckets = bucketedAdjacency(name)
       println(f"""{"metric":"graphscale_adj_build","nodes":$n,"edges":$m,"buckets":$nBuckets,"total_sec":${(System.nanoTime() - tb0) / 1e9}%.2f}""")
       timed("lpa2_bucketed")(GraphOps.labelPropagation(edges, iterations = 2,
         symAdj = Some(spark.table(name))).count())
@@ -143,27 +136,10 @@ object GraphScaleBench {
     if (which == "kcore" || which == "both")
       timed("kcore3")(GraphOps.kCorePeel(edges, k = 3, rounds = 3).count())
     if (which == "tri") {
-      // the g01 storage shape: symmetric adjacency bucketed on src
       val name = s"graphscale_triadj_$n"
-      spark.sql(s"DROP TABLE IF EXISTS `$name`")
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(name)))
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      val nBuckets = math.min(4096L, math.max(
-        spark.sessionState.conf.numShufflePartitions.toLong,
-        2 * m / 50000L)).toInt
-      edges.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(edges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(nBuckets, col("src"))
-        .write.mode("overwrite").bucketBy(nBuckets, "src").sortBy("src")
-        .saveAsTable(name)
+      bucketedAdjacency(name)
       timed("tri_adjintersect")(GraphOps
         .triangleCountAdjIntersect(spark.table(name))
-        .head().getLong(0))
-      timed("tri_wedgejoin")(GraphOps
-        .triangleCountDegreeOrdered(edges, adj = Some(spark.table(name)))
         .head().getLong(0))
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
     }

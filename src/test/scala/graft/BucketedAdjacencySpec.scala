@@ -78,9 +78,8 @@ class BucketedAdjacencySpec extends AnyFunSuite {
   test("g01 triangle count matches between bucketed and edge-list paths") {
     val pairs = DedupOps.sharedPairGraph(spark, dir).select("doc_a", "doc_b")
     val adj = DedupOps.sharedAdjacency(spark, dir)
-    val got = GraphOps.triangleCountDegreeOrdered(pairs, adj = Some(adj))
-      .head.getLong(0)
-    val want = GraphOps.triangleCountDegreeOrdered(pairs).head.getLong(0)
+    val got = GraphOps.triangleCountAdjIntersect(adj).head.getLong(0)
+    val want = GraphOps.triangleCount(pairs).head.getLong(0)
     assert(got == want)
   }
 }

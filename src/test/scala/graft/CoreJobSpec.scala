@@ -150,7 +150,9 @@ class CoreJobSpec extends AnyFunSuite {
 
   test("json sink escapes control characters and quotes") {
     val path = Files.createTempFile("sink", ".json").toString
-    Sinks.writeJsonObject(path, Iterator("a\"b" -> "x\ny"))
+    val sink = new Sinks.JsonObjectSink(path)
+    sink.write("a\"b", "x\ny")
+    assert(sink.close() == 1L)
     val s = Files.readString(Paths.get(path))
     assert(s == "{\n  \"a\\\"b\": \"x\\ny\"\n}")
   }

@@ -32,14 +32,14 @@ class DedupCCSpec extends AnyFunSuite {
     // diameter 39 ≫ crossoverAfter = 8: plain per-round propagation
     // would hand off to alt-star, but the r16 pointer jump doubles the
     // label-pointer depth per round, so the loop itself must settle in
-    // ≤ 8 rounds (O(log diameter)) — pinned via the diagnostic counter
+    // ≤ 8 rounds (O(log diameter)) — pinned via the returned round count
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
     val got = labels(DedupOps.connectedComponents(chain))
     assert(got == (1L to 40L).map(_ -> 1L).toMap)
-    assert(DedupOps.lastPropagationRounds >= 1 &&
-      DedupOps.lastPropagationRounds <= 8,
+    val rounds = DedupOps.propagateLabels(chain).map(_._2)
+    assert(rounds.exists(r => r >= 1 && r <= 8),
       s"expected propagation (not alt-star fallback) to converge the " +
-        s"40-chain; rounds=${DedupOps.lastPropagationRounds}")
+        s"40-chain; rounds=$rounds")
   }
 
   test("crossover to alt-star still fires when the budget truly runs out") {
@@ -48,7 +48,7 @@ class DedupCCSpec extends AnyFunSuite {
     val chain = (1L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
     val got = labels(DedupOps.connectedComponents(chain, crossoverAfter = 1))
     assert(got == (1L to 40L).map(_ -> 1L).toMap)
-    assert(DedupOps.lastPropagationRounds == -1,
+    assert(DedupOps.propagateLabels(chain, crossoverAfter = 1).isEmpty,
       "expected the alt-star fallback path")
   }
 

@@ -7,7 +7,9 @@ import scala.jdk.CollectionConverters._
 
 /** Every `SPARK_GRAFT_*` environment knob the code reads is documented in
   * README's knob table, and every documented knob is still read: a new
-  * knob fails here until it is documented. */
+  * knob fails here until it is documented. Operator and streaming code
+  * also keeps no process-global mutable state: a test hook or counter
+  * there is shared by every query and stream in the JVM. */
 class EnvKnobsSpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.props("user.dir"))
@@ -15,9 +17,12 @@ class EnvKnobsSpec extends AnyFunSuite {
 
   private def read(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
 
+  private def filesUnder(dir: String): Seq[Path] =
+    Files.walk(root.resolve(dir)).iterator().asScala
+      .filter(Files.isRegularFile(_)).toSeq
+
   test("the knobs read under src/main and tools/run.sh equal README's table") {
-    val sources = Files.walk(root.resolve("src/main")).iterator().asScala
-      .filter(Files.isRegularFile(_)).toSeq :+ root.resolve("tools/run.sh")
+    val sources = filesUnder("src/main") :+ root.resolve("tools/run.sh")
     val used = sources.flatMap(p => Knob.findAllIn(read(p))).toSet
     val documented = "(?m)^\\| `(SPARK_GRAFT_[A-Z_]+)` \\|".r
       .findAllMatchIn(read(root.resolve("README.md"))).map(_.group(1)).toSet
@@ -26,5 +31,19 @@ class EnvKnobsSpec extends AnyFunSuite {
       s"undocumented knobs: ${(used -- documented).toSeq.sorted.mkString(", ")}")
     assert((documented -- used).isEmpty,
       s"documented but unused: ${(documented -- used).toSeq.sorted.mkString(", ")}")
+  }
+
+  test("operators and streaming hold no @volatile or private[graft] var") {
+    val global = """@volatile|private\[graft\] var""".r
+    val hits = Seq("src/main/scala/graft/operators",
+        "src/main/scala/graft/streaming").flatMap(filesUnder).sorted
+      .flatMap { p =>
+        read(p).linesIterator.zipWithIndex.collect {
+          case (line, i) if global.findFirstIn(line).isDefined =>
+            s"${root.relativize(p)}:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(hits.isEmpty,
+      s"process-global mutable state in operator code:\n${hits.mkString("\n")}")
   }
 }

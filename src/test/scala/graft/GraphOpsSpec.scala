@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.GraphOps
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,8 +11,31 @@ class GraphOpsSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4").getOrCreate()
   import spark.implicits._
 
-  private def tri(df: org.apache.spark.sql.DataFrame): Long =
+  private def tri(df: DataFrame): Long =
     df.collect().head.getLong(0)
+
+  /** The clean symmetric adjacency g01's kernel reads, as
+    * `DedupOps.sharedAdjacency` stores it: both orientations of every
+    * distinct non-loop edge. */
+  private def symAdj(edges: DataFrame): DataFrame = {
+    val e = edges.toDF("src", "dst").filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("src"),
+        greatest(col("src"), col("dst")).as("dst")).distinct()
+    e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** g01's kernel on `edges`, on its default (broadcast) path and on
+    * its shuffle-hash fallback; both counts must agree. */
+  private def adjTri(edges: DataFrame): Long = {
+    val adj = symAdj(edges)
+    val viaBroadcast = tri(GraphOps.triangleCountAdjIntersect(adj))
+    val shuffled = GraphOps.triangleCountAdjIntersect(adj,
+      broadcastNbr = Some(false))
+    assert(shuffled.queryExecution.executedPlan.toString
+      .contains("ShuffledHashJoin"))
+    assert(tri(shuffled) == viaBroadcast)
+    viaBroadcast
+  }
 
   test("degree-ordered count equals canonical count") {
     // K4 (4 triangles) + a pendant chain + an isolated triangle
@@ -20,15 +44,14 @@ class GraphOpsSpec extends AnyFunSuite {
       (4L, 5L), (5L, 6L),
       (7L, 8L), (8L, 9L), (9L, 7L)).toDF("src", "dst")
     assert(tri(GraphOps.triangleCount(edges)) == 5L)
-    assert(tri(GraphOps.triangleCountDegreeOrdered(edges)) == 5L)
+    assert(adjTri(edges) == 5L)
 
     // pseudo-random graph: same counts whatever they are, plus dup +
     // reversed edges to exercise canonicalization
     val rnd = new scala.util.Random(7)
     val es = Seq.fill(400)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
     val redges = (es ++ es.take(50).map(_.swap)).toDF("src", "dst")
-    assert(tri(GraphOps.triangleCount(redges)) ==
-      tri(GraphOps.triangleCountDegreeOrdered(redges)))
+    assert(tri(GraphOps.triangleCount(redges)) == adjTri(redges))
   }
 
   test("personalized PageRank matches hand computation on a 2-node graph") {
@@ -71,7 +94,7 @@ class GraphOpsSpec extends AnyFunSuite {
     // two out-edges and the wedge stage is EMPTY
     val star = ((1L to 40L) ++ (101L to 140L)).map(l => (100L, l)).toDF("src", "dst")
     assert(tri(GraphOps.triangleCount(star)) == 0L)
-    assert(tri(GraphOps.triangleCountDegreeOrdered(star)) == 0L)
+    assert(adjTri(star) == 0L)
 
     val e = star.select(least(col("src"), col("dst")).as("a"),
       greatest(col("src"), col("dst")).as("b"))
@@ -80,7 +103,7 @@ class GraphOpsSpec extends AnyFunSuite {
       .filter(col("b") < col("c")).count()
     assert(canonicalWedges == 1600L)
 
-    val o = GraphOps.degreeOriented(star)
+    val o = GraphOps.degreeOrientedFromAdj(symAdj(star))
     val orientedWedges = o.alias("x")
       .join(o.alias("y"), col("x.src") === col("y.src"))
       .filter(col("x.dst") < col("y.dst")).count()

@@ -119,30 +119,27 @@ class PrefixKernelSpec extends AnyFunSuite {
   }
 
   test("forced past-broadcast verify: shuffle-hash attaches, no array-laden sort") {
-    DedupOps.verifyBcOverride = Some(false)
-    try {
-      val df = DedupOps.prefixFilterPairsOn(
-        DedupOps.hashedWordSetsOf(docsDf), 0.9)
-      val plan = df.queryExecution.explainString(FormattedMode)
-      // the verify attaches must be ShuffledHashJoin on doc_a / doc_b …
-      assert(plan.contains("ShuffledHashJoin"), plan)
-      // … and NO SortMergeJoin may touch the candidate pair frame: an
-      // SMJ there external-sorts pair-count × array bytes (the measured
-      // sf10 cliff). Node-detail paragraphs in formatted mode start
-      // "(n) NodeName"; any SMJ block naming doc_a/doc_b is a fail.
-      val smjBlocks = plan.split("\n\n")
-        .filter(b => b.matches("(?s)\\(\\d+\\) SortMergeJoin.*"))
-      assert(!smjBlocks.exists(b => b.contains("doc_a") || b.contains("doc_b")),
-        smjBlocks.mkString("\n---\n"))
-      // … and the attach must ship the rank-encoded BINARY sets, not raw
-      // long arrays: the varint merge in the plan is the pin that the
-      // pair-linear exchange runs at the compact per-pair constant
-      // (r11 — 2.3× → 1.17× vs broadcast at sf1.0)
-      assert(plan.contains("varint_intersect_within"), plan)
-      val forced = df
-        .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("j"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(forced == truth)
-    } finally DedupOps.verifyBcOverride = None
+    val df = DedupOps.prefixFilterPairsOn(
+      DedupOps.hashedWordSetsOf(docsDf), 0.9, verifyBroadcast = Some(false))
+    val plan = df.queryExecution.explainString(FormattedMode)
+    // the verify attaches must be ShuffledHashJoin on doc_a / doc_b …
+    assert(plan.contains("ShuffledHashJoin"), plan)
+    // … and NO SortMergeJoin may touch the candidate pair frame: an
+    // SMJ there external-sorts pair-count × array bytes (the measured
+    // sf10 cliff). Node-detail paragraphs in formatted mode start
+    // "(n) NodeName"; any SMJ block naming doc_a/doc_b is a fail.
+    val smjBlocks = plan.split("\n\n")
+      .filter(b => b.matches("(?s)\\(\\d+\\) SortMergeJoin.*"))
+    assert(!smjBlocks.exists(b => b.contains("doc_a") || b.contains("doc_b")),
+      smjBlocks.mkString("\n---\n"))
+    // … and the attach must ship the rank-encoded BINARY sets, not raw
+    // long arrays: the varint merge in the plan is the pin that the
+    // pair-linear exchange runs at the compact per-pair constant
+    // (r11 — 2.3× → 1.17× vs broadcast at sf1.0)
+    assert(plan.contains("varint_intersect_within"), plan)
+    val forced = df
+      .select(col("doc_a"), col("doc_b"), round(col("jac"), 4).as("j"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(forced == truth)
   }
 }

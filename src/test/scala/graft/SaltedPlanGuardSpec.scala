@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, Join, JoinHint, LogicalPlan, RepartitionByExpression}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,11 +18,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * tiny hot-token frame. A Spark/AQE upgrade could silently restore the
   * single-task shape; these assertions turn that into a test failure.
   *
-  * Every guard is proven to BITE: DedupOps' test-only
-  * `ablateExplicitWidth` / `ablateBroadcastHot` vars remove the
-  * corresponding plan piece (output unchanged) and the same predicate
-  * must then FAIL — a guard that passes on the ablated plan guards
-  * nothing.
+  * Every guard is proven to BITE: a test-side optimizer rule
+  * (`spark.experimental.extraOptimizations`, removed again in a
+  * `finally`) strips the corresponding plan piece from the kernel's
+  * plan (output unchanged) and the same predicate must then FAIL — a
+  * guard that passes on the ablated plan guards nothing. The ablations
+  * live here, not in DedupOps: production code carries no switch that
+  * could restore the single-task shape with byte-identical output.
   *
   * Fixture size is irrelevant: the guarded shapes are static plan
   * properties (REPARTITION_BY_NUM origin is exactly the origin AQE's
@@ -110,6 +114,29 @@ class SaltedPlanGuardSpec extends AnyFunSuite {
     operators.DedupOps.containmentCandidatesOn(
       operators.DedupOps.hashedWordSetsOf(docs), 0.9)
 
+  /** Ablation: drop every explicit-width `repartition(N, keys)`. */
+  private object StripExplicitWidth extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+      case r: RepartitionByExpression if r.optNumPartitions.isDefined => r.child
+    }
+  }
+
+  /** Ablation: clear every `broadcast(...)` join hint. */
+  private object StripBroadcastHints extends Rule[LogicalPlan] {
+    def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+      case j: Join => j.copy(hint = JoinHint(
+        j.hint.leftHint.filterNot(_.strategy.contains(BROADCAST)),
+        j.hint.rightHint.filterNot(_.strategy.contains(BROADCAST))))
+    }
+  }
+
+  private def ablated(rule: Rule[LogicalPlan])(body: => Unit): Unit = {
+    val old = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = old :+ rule
+    try body
+    finally spark.experimental.extraOptimizations = old
+  }
+
   private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
     val olds = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
     kv.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -147,29 +174,26 @@ class SaltedPlanGuardSpec extends AnyFunSuite {
   }
 
   test("d02 forced exact-verify attaches are ShuffledHashJoins on doc_a/doc_b, never sort-merged") {
-    // SPARK_GRAFT_VERIFY_BC=false is the >2M-doc production path; the
-    // band-join SHJ is pinned by DedupHotBucketSpec, this pins the two
-    // verify attaches (an SMJ here external-sorts the array-laden
+    // the past-broadcast verify is the large-corpus production path;
+    // the band-join SHJ is pinned by DedupHotBucketSpec, this pins the
+    // two verify attaches (an SMJ here external-sorts the array-laden
     // candidate frame — the measured 46–55× decade cliff)
-    operators.DedupOps.verifyBcOverride = Some(false)
-    try {
-      val bs = blocks(operators.DedupOps.nearDupPairs(spark, dir))
-      assert(joinsOn(bs, "ShuffledHashJoin", "doc_a") >= 1)
-      assert(joinsOn(bs, "ShuffledHashJoin", "doc_b") >= 1)
-      assert(joinsOn(bs, "SortMergeJoin", "doc_a") == 0 &&
-        joinsOn(bs, "SortMergeJoin", "doc_b") == 0,
-        bs.filter(isNode(_, "SortMergeJoin")).mkString("\n\n"))
-    } finally operators.DedupOps.verifyBcOverride = None
+    val bs = blocks(operators.DedupOps.nearDupPairs(spark, dir,
+      verifyBroadcast = Some(false)))
+    assert(joinsOn(bs, "ShuffledHashJoin", "doc_a") >= 1)
+    assert(joinsOn(bs, "ShuffledHashJoin", "doc_b") >= 1)
+    assert(joinsOn(bs, "SortMergeJoin", "doc_a") == 0 &&
+      joinsOn(bs, "SortMergeJoin", "doc_b") == 0,
+      bs.filter(isNode(_, "SortMergeJoin")).mkString("\n\n"))
   }
 
   test("the explicit-width guard BITES: ablating the repartitions fails it") {
-    operators.DedupOps.ablateExplicitWidth = true
-    try {
+    ablated(StripExplicitWidth) {
       assert(byNumExchanges(blocks(d07Kernel), Seq("r", "gx", "gy")) == 0)
       val bs = blocks(d09Kernel)
       assert(byNumExchanges(bs, Seq("h", "grp")) == 0)
       assert(byNumExchanges(bs, Seq("doc_a", "doc_b")) == 0)
-    } finally operators.DedupOps.ablateExplicitWidth = false
+    }
   }
 
   test("the broadcast guard BITES: ablating the hint drops the broadcast when size stats can't carry it") {
@@ -179,11 +203,10 @@ class SaltedPlanGuardSpec extends AnyFunSuite {
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       assert(joinsOn(blocks(d07Kernel), "BroadcastHashJoin", "r", "LeftOuter") >= 1)
       assert(joinsOn(blocks(d09Kernel), "BroadcastHashJoin", "h", "LeftOuter") >= 2)
-      operators.DedupOps.ablateBroadcastHot = true
-      try {
+      ablated(StripBroadcastHints) {
         assert(joinsOn(blocks(d07Kernel), "BroadcastHashJoin", "r", "LeftOuter") == 0)
         assert(joinsOn(blocks(d09Kernel), "BroadcastHashJoin", "h", "LeftOuter") == 0)
-      } finally operators.DedupOps.ablateBroadcastHot = false
+      }
     }
   }
 }
