@@ -8,12 +8,12 @@ import graft.progress.ProgressListener
   * Usage: `tools/run.sh graft.TimeQuery <name>[,<name>...] [sfDir] [runs]`.
   *
   * Each run executes the listed queries in order in ONE session, so a
-  * family sharing a written-once artifact (d06/g01/g04/g05 over
-  * `DedupOps.sharedAdjacency`) is timed the way a pipeline session pays
-  * it: the first query builds, the rest ride the memo. Every query's
-  * seconds and scheduled Spark jobs are printed per run; with two or more
-  * runs, the min over the runs after the first (the first pays JIT and
-  * memo builds) follows. The per-stage table of the last run closes the
+  * family sharing a written-once artifact (d06/d15/g01/g04/g05 over the
+  * `DedupOps.sharedAdjacency` table) is timed the way a pipeline session
+  * pays it: the first query builds the table, the rest read it from the
+  * session catalog. Every query's seconds and scheduled Spark jobs are
+  * printed per run; with two or more runs, the min over the runs after
+  * the first (the first pays JIT and the table build) follows. The per-stage table of the last run closes the
   * output.
   */
 object TimeQuery {

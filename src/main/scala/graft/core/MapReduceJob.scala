@@ -97,31 +97,7 @@ object MiniJob {
   def transform[K: Encoder, V](spark: SparkSession, spec: JobSpec[K, V],
       lines: Dataset[String])(
       implicit kvEnc: Encoder[(K, V)]): Dataset[(K, V)] = {
-    val flat = lines.flatMap { line =>
-      val raw =
-        try spec.mapper(line)
-        catch {
-          case e: InvalidResultException => throw e
-          case scala.util.control.NonFatal(e) => throw new UserFunctionCrashedException(
-            s"job '${spec.name}': mapper crashed (user_function_crashed): ${e.getMessage}", e)
-        }
-      if (raw == null) throw new UnexpectedReturnTypeException(
-        s"job '${spec.name}': mapper returned null instead of pairs (unexpected_return_type)")
-      // consume INSIDE the taxonomy wrapper: a lazy IterableOnce (iterator,
-      // view, LazyList) runs user code during iteration, not at the call
-      val out =
-        try raw.iterator.toSeq
-        catch {
-          case e: InvalidResultException => throw e
-          case scala.util.control.NonFatal(e) => throw new UserFunctionCrashedException(
-            s"job '${spec.name}': mapper crashed (user_function_crashed): ${e.getMessage}", e)
-        }
-      out.foreach { case (k, _) =>
-        if (k == null) throw new InvalidResultException(
-          s"job '${spec.name}': mapper emitted a null key (invalid_result_format)")
-      }
-      out
-    }
+    val flat = lines.flatMap(line => checked(spec.name, "mapper")(spec.mapper(line)))
     val mapped = spec.combine match {
       case None => flat
       case Some(c) => flat.mapPartitions { it =>
@@ -134,29 +110,8 @@ object MiniJob {
     }
     val reduced = mapped
       .groupByKey(_._1)
-      .flatMapGroups { (k, it) =>
-        val raw =
-          try spec.reducer(k, it.map(_._2))
-          catch {
-            case e: InvalidResultException => throw e
-            case scala.util.control.NonFatal(e) => throw new UserFunctionCrashedException(
-              s"job '${spec.name}': reducer crashed (user_function_crashed): ${e.getMessage}", e)
-          }
-        if (raw == null) throw new UnexpectedReturnTypeException(
-          s"job '${spec.name}': reducer returned null instead of pairs (unexpected_return_type)")
-        val out =
-          try raw.iterator.toSeq
-          catch {
-            case e: InvalidResultException => throw e
-            case scala.util.control.NonFatal(e) => throw new UserFunctionCrashedException(
-              s"job '${spec.name}': reducer crashed (user_function_crashed): ${e.getMessage}", e)
-          }
-        out.foreach { case (k2, _) =>
-          if (k2 == null) throw new InvalidResultException(
-            s"job '${spec.name}': reducer emitted a null key (invalid_result_format)")
-        }
-        out
-      }
+      .flatMapGroups((k, it) =>
+        checked(spec.name, "reducer")(spec.reducer(k, it.map(_._2))))
 
     // Distributed sort replaces the reference's driver-side in-memory sort
     // (job_runner.ex:319 "Sorting requires loading all to memory").
@@ -169,6 +124,36 @@ object MiniJob {
       case Some(SortOpt.ValueDesc) => reduced.sort(col("_2").desc, col("_1").asc)
       case Some(SortOpt.Default)   => reduced.sort(col("_2").desc, col("_1").asc)
     }
+  }
+
+  /** Runs one user map/reduce call under the error taxonomy: a throw is
+    * user_function_crashed, a null return unexpected_return_type, a null
+    * key invalid_result_format. */
+  private def checked[K, V](job: String, side: String)(
+      call: => IterableOnce[(K, V)]): Seq[(K, V)] = {
+    def crashed(e: Throwable) = new UserFunctionCrashedException(
+      s"job '$job': $side crashed (user_function_crashed): ${e.getMessage}", e)
+    val raw =
+      try call
+      catch {
+        case e: InvalidResultException => throw e
+        case scala.util.control.NonFatal(e) => throw crashed(e)
+      }
+    if (raw == null) throw new UnexpectedReturnTypeException(
+      s"job '$job': $side returned null instead of pairs (unexpected_return_type)")
+    // consume INSIDE the taxonomy wrapper: a lazy IterableOnce (iterator,
+    // view, LazyList) runs user code during iteration, not at the call
+    val out =
+      try raw.iterator.toSeq
+      catch {
+        case e: InvalidResultException => throw e
+        case scala.util.control.NonFatal(e) => throw crashed(e)
+      }
+    out.foreach { case (k, _) =>
+      if (k == null) throw new InvalidResultException(
+        s"job '$job': $side emitted a null key (invalid_result_format)")
+    }
+    out
   }
 
   /** Full job: transform + both single-file sinks (§3.1 step 9 analog). */

@@ -280,7 +280,7 @@ object DedupOps {
     // exact verify on candidates only, over sorted-long word sets; hot
     // docs' mutual pairs come from the exact kernel (disjoint from the
     // cold set by the both-hot filter above, so a plain union)
-    exactVerify(sets, cand, threshold, est = Some(estOf(estM)),
+    exactVerify(sets, cand, threshold, est = estOf(estM),
       verifyBroadcast = verifyBroadcast)
       .unionAll(prefixFilterPairsOn(
         sets.join(hotDocs, Seq("doc_id"), "left_semi"), threshold,
@@ -356,15 +356,13 @@ object DedupOps {
   private def estOf(m: Map[String, Any]): (Long, Long) =
     (m("est_n").asInstanceOf[Long], m("est_e").asInstanceOf[Long])
 
-  /** `est`, when given, is the (row count, Σ|hs|) of `sets`, observed on
-    * the caller's materialize action (guide §2.6) — the broadcast-size
-    * guard below then costs NO scheduled job at all. Every caller has
-    * such a materialize, so the in-function fallback aggregate only runs
-    * for future call sites that cannot provide it. `verifyBroadcast`
-    * forces the broadcast decision (specs pin the shuffle-hash plan with
+  /** `est` is the (row count, Σ|hs|) of `sets`, observed on the
+    * caller's materialize action (guide §2.6) — the broadcast-size guard
+    * below costs NO scheduled job at all. `verifyBroadcast` forces the
+    * broadcast decision (specs pin the shuffle-hash plan with
     * `Some(false)`); `None` derives it from the size guard. */
   private def exactVerify(sets: DataFrame, cand: DataFrame,
-      threshold: Double, est: Option[(Long, Long)] = None,
+      threshold: Double, est: (Long, Long),
       verifyBroadcast: Option[Boolean] = None): DataFrame = {
     // The array attaches are the kernel's byte hog at scale: as SMJs,
     // each ships the full candidate frame again, the second time with a
@@ -382,15 +380,8 @@ object DedupOps {
     // and cap at the lower of a fixed budget and a fraction of the
     // live driver heap (TWO copies broadcast: the doc_a and doc_b
     // aliases).
-    // Resolve the forced decision FIRST: the count+sum estimation is
-    // itself a Spark job over the sets frame, and a forced run must not
-    // pay that wasted pass.
     val bc = verifyBroadcast.getOrElse {
-      val (n, e) = est.getOrElse {
-        val st = sets.agg(count(lit(1)).as("n"),
-          coalesce(sum(size(col("hs"))), lit(0L)).as("e")).head()
-        (st.getLong(0), st.getLong(1))
-      }
+      val (n, e) = est
       val estBytes = n * 48L + e * 8L
       estBytes <= math.min(1500000000L, Runtime.getRuntime.maxMemory / 10)
     }
@@ -1243,11 +1234,12 @@ object DedupOps {
     * Oracle: DuckDB recursive CTE computing min reachable id over the
     * same (quadratic, exact) pair set. */
   val d06 = Q("d06_dedup_clusters",
-    (s, dir) =>
-      connectedComponents(sharedPairGraph(s, dir).select("doc_a", "doc_b"),
-          symAdj = Some(sharedAdjacency(s, dir)))
+    (s, dir) => {
+      val adj = sharedAdjacency(s, dir)
+      connectedComponents(pairView(adj), symAdj = Some(adj))
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
-        .orderBy("doc_id"),
+        .orderBy("doc_id")
+    },
     Some("""
       WITH RECURSIVE w AS (
         SELECT doc_id,
@@ -1438,29 +1430,6 @@ object DedupOps {
       threshold: Double = 0.9): DataFrame =
     prefixFilterPairsOn(hashedWordSets(s, dir), threshold)
 
-  /** Session-scoped memo of the verified near-dup pair graph. The graph
-    * family (d06 clustering, g01 triangles, g04 communities) consumes
-    * the SAME verified pair set; without sharing, each catalog query
-    * re-runs the whole prefix-filter kernel from the parquet scan up.
-    * The kernel runs once per (session, dir, threshold) and is parked
-    * in a WRITTEN-ONCE PARQUET intermediate; later consumers open a
-    * plain scan of it — exactly the materialization a 100 TB pipeline
-    * would use between its dedup and graph-analysis phases. A parquet
-    * intermediate (not a `localCheckpoint`) on purpose: checkpoint
-    * blocks reused across separate SQL executions reference the first
-    * execution's metric accumulators, which the ContextCleaner can
-    * collect in between — recomputation then runs the whole kernel
-    * again per consumer (measured: g01 48.6 s at sf0.1 on the
-    * checkpoint variant vs ~1 s scanning the parquet). Keyed by
-    * applicationId AND a listing fingerprint of the input files (paths,
-    * lengths, mtimes), so a rewrite of the data under `dir` within one
-    * application invalidates the memo instead of serving stale pairs.
-    * The intermediate lives under Materialize's scratch base — a
-    * configurable shared filesystem on a cluster (`graft.scratchDir`),
-    * deleted on session shutdown. */
-  private val pairGraphMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
-
   /** Cheap content fingerprint of everything under `dir`: md5 over the
     * sorted (path, length, mtime) listing via the path's own filesystem
     * — no data read, works on local FS and shared FS alike. */
@@ -1478,73 +1447,83 @@ object DedupOps {
       .map("%02x".format(_)).mkString
   }
 
-  private[graft] def sharedPairGraph(s: SparkSession, dir: String,
-      threshold: Double = 0.9): DataFrame = {
-    val key = (s.sparkContext.applicationId,
-      inputFingerprint(s, dir), threshold)
-    val path = pairGraphMemo.getOrElseUpdate(key, {
-      val p = graft.core.Materialize.freshScratchPath(s, "pairgraph")
-      // edge endpoints only: every consumer (CC, LPA, triangles, d15)
-      // reads doc_a/doc_b — persisting the r15 icnt/un verify integers
-      // would fatten the 120M-pair sf10 intermediate by ~1.4 GB for
-      // nothing
-      prefixFilterPairs(s, dir, threshold)
-        .select("doc_a", "doc_b")
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+  private val AdjPrefix = "graft_adj_"
+  /** Serializes [[sharedAdjacency]]'s check-then-build: two cold callers
+    * must not both drop, delete and rewrite the same table. */
+  private val adjLock = new Object
 
-  /** Symmetric adjacency of [[sharedPairGraph]], persisted ONCE as a
-    * table BUCKETED AND SORTED on `src` — the graph-side twin of
-    * `MergeOps.bucketedSnapshots`. The CC/LPA/triangle consumers all
-    * open their work with a shuffle keyed on one endpoint (CC's
-    * per-round edge⋈label join, LPA's vote join, the triangle degree
-    * aggregate); reading the adjacency pre-bucketed on that key makes
-    * the adjacency side of every one of those EXCHANGE-FREE — the 2m
-    * edge rows shuffle once at write time and never again, instead of
-    * once per consumer per round (BucketedAdjacencySpec pins the plans
-    * and result parity). Bucket count follows the g01 wedge-width rule
-    * (edge-count-derived, floored at shuffle.partitions, capped 4096)
-    * so the downstream explosion stages inherit a sane width too.
-    * Memoized per (application, input fingerprint, threshold), exactly
-    * like the pair graph itself. */
-  private val adjMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Double), String]
-
+  /** The verified near-dup pair graph (d07's prefix-filter kernel) as a
+    * symmetric adjacency table BUCKETED AND SORTED on `src`: the one
+    * artifact d06, d15, g01, g04 and g05 share, so the kernel runs once
+    * per (catalog, input, threshold) instead of once per query. The
+    * session catalog is the only memo — the name
+    * `graft_adj_<md5 of the input listing>_<threshold×100>` is the whole
+    * key, so rewritten input is a new name, not stale pairs;
+    * [[dropSharedGraphs]] resets it. Every consumer opens with a shuffle
+    * keyed on one endpoint (CC's edge⋈label join, LPA's vote join, the
+    * triangle degree aggregate), and the bucketing makes the adjacency
+    * side of each EXCHANGE-FREE: the 2m edge rows shuffle once at write
+    * time, not once per consumer per round (BucketedAdjacencySpec pins
+    * the plans and result parity). */
   private[graft] def sharedAdjacency(s: SparkSession, dir: String,
       threshold: Double = 0.9): DataFrame = {
-    val fp = inputFingerprint(s, dir)
-    val key = (s.sparkContext.applicationId, fp, threshold)
-    val table = adjMemo.getOrElseUpdate(key, {
-      val name = s"graft_adj_${fp.take(12)}_${(threshold * 100).round}"
-      writeBucketedAdjacency(s, name, sharedPairGraph(s, dir, threshold)
-        .select(col("doc_a").as("src"), col("doc_b").as("dst")))
-      name
-    })
-    s.table(table)
+    val name = s"$AdjPrefix${inputFingerprint(s, dir)}_${(threshold * 100).round}"
+    adjLock.synchronized {
+      if (!s.catalog.tableExists(name)) {
+        // edge endpoints only: every consumer reads src/dst — the r15
+        // icnt/un verify integers would fatten the 120M-pair sf10 table
+        // by ~1.4 GB for nothing. The edge count that sizes the buckets
+        // rides the materialize, so the kernel executes exactly once.
+        val (pairs, m) = Materialize.observed(
+          prefixFilterPairs(s, dir, threshold)
+            .select(col("doc_a").as("src"), col("doc_b").as("dst")),
+          "adjacency", Seq(count(lit(1)).as("m")))
+        writeBucketedAdjacency(s, name, pairs, m("m").asInstanceOf[Long])
+      }
+    }
+    s.table(name)
   }
 
-  /** Writes the undirected edge list `pairs` (src, dst) symmetrized as
-    * table `name`, BUCKETED AND SORTED on `src`: the table
-    * [[sharedAdjacency]] persists, and the one GraphScaleBench's
-    * bucketed modes time. Returns the bucket count. */
+  /** The verified pair graph as a view of [[sharedAdjacency]]. */
+  private[graft] def sharedPairGraph(s: SparkSession, dir: String,
+      threshold: Double = 0.9): DataFrame =
+    pairView(sharedAdjacency(s, dir, threshold))
+
+  /** Each edge of the symmetric adjacency `adj` once, as
+    * (doc_a < doc_b) — the orientation the kernel emits. */
+  private[graft] def pairView(adj: DataFrame): DataFrame =
+    adj.filter(col("src") < col("dst"))
+      .select(col("src").as("doc_a"), col("dst").as("doc_b"))
+
+  /** Drops every [[sharedAdjacency]] table, so the next graph-family
+    * query rebuilds its graph from the kernel. */
+  private[graft] def dropSharedGraphs(s: SparkSession): Unit =
+    adjLock.synchronized {
+      s.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith(AdjPrefix))
+        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+
+  /** Writes the undirected edge list `pairs` (src, dst), `m` edges,
+    * symmetrized as table `name`, BUCKETED AND SORTED on `src`: the
+    * table [[sharedAdjacency]] persists, and the one GraphScaleBench's
+    * bucketed modes time. Bucket count follows the g01 wedge-width rule
+    * (edge-count-derived, floored at shuffle.partitions, capped 4096)
+    * so the downstream explosion stages inherit a sane width too.
+    * Returns the bucket count. */
   private[graft] def writeBucketedAdjacency(s: SparkSession, name: String,
-      pairs: DataFrame): Int = {
+      pairs: DataFrame, m: Long): Int = {
     // the warehouse DIRECTORY outlives the in-memory catalog: a table
     // written by a previous application leaves its location on disk
     // while the fresh catalog has no entry, and saveAsTable then fails
     // with LOCATION_ALREADY_EXISTS — drop any catalog entry and delete
-    // the stale location first (idempotent; sharedAdjacency's memo
-    // guards same-application reuse)
+    // the stale location first
     s.sql(s"DROP TABLE IF EXISTS `$name`")
     val loc = new org.apache.hadoop.fs.Path(
       s.sessionState.catalog.defaultTablePath(
         org.apache.spark.sql.catalyst.TableIdentifier(name)))
     val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
-    val m = pairs.count()
     // core-count floor via defaultNumShufflePartitions (= the
     // shuffle.partitions conf), not numShufflePartitions, which under
     // AQE is the 8×-cores initialPartitionNum — 256 buckets at bench
@@ -1570,7 +1549,7 @@ object DedupOps {
     // separately scheduled aggregate job, guide §2.6)
     val (sets, m) = Materialize.observed(sets0, "sets", setsEstMetrics)
     exactVerify(sets, prefixCandidatesOn(sets, threshold), threshold,
-      est = Some(estOf(m)), verifyBroadcast = verifyBroadcast)
+      est = estOf(m), verifyBroadcast = verifyBroadcast)
   }
 
   val d07 = Q("d07_allpairs_jaccard",
@@ -1959,7 +1938,7 @@ object DedupOps {
           col("y.sz") - col("y.pos")) >= need &&
         first_common_long(col("x.prefr"), col("y.prefr")) === col("r"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    exactVerify(sets, cand, threshold, est = Some(estOf(estM)))
+    exactVerify(sets, cand, threshold, est = estOf(estM))
   }
 
   val d10 = Q("d10_incremental_neardup",
@@ -2167,7 +2146,7 @@ object DedupOps {
     * Winner = argmax(t04's quality score, ties by doc_id) inside each
     * cluster; the argmax is a WindowGroupLimit over clusters (bounded
     * groups), the quality score rides the document scan, and the cluster
-    * labels reuse the shared written-once pair graph — so the only new
+    * labels reuse d06's shared adjacency table — so the only new
     * cost over d06 is one scan-riding projection and a per-cluster top-1.
     * Ordering uses t04's 4-digit score in its EXACT-INTEGER round-half-up
     * form (see t04's scaladoc — the quality rational can land exactly on
@@ -2176,9 +2155,8 @@ object DedupOps {
     * every scale. */
   val d15 = Q("d15_quality_winner_dedup",
     (s, dir) => {
-      val cc = connectedComponents(
-        sharedPairGraph(s, dir).select("doc_a", "doc_b"),
-        symAdj = Some(sharedAdjacency(s, dir)))
+      val adj = sharedAdjacency(s, dir)
+      val cc = connectedComponents(pairView(adj), symAdj = Some(adj))
         .select(col("node").as("doc_id"), col("component").as("cluster_id"))
       val quality = TextOps.withQualityQk(Tables.df(s, dir, "documents"))
         .select(col("doc_id"), (col("qk") / 10000.0).as("quality"))

@@ -501,12 +501,12 @@ object GraphOps {
   }
 
   val g04 = Q("g04_lpa_communities",
-    (s, dir) =>
-      labelPropagation(
-        DedupOps.sharedPairGraph(s, dir, 0.7).select("doc_a", "doc_b"),
-        iterations = 2, symAdj = Some(DedupOps.sharedAdjacency(s, dir, 0.7)))
+    (s, dir) => {
+      val adj = DedupOps.sharedAdjacency(s, dir, 0.7)
+      labelPropagation(DedupOps.pairView(adj), iterations = 2, symAdj = Some(adj))
         .select(col("node").as("doc_id"), col("label").as("community"))
-        .orderBy("doc_id"),
+        .orderBy("doc_id")
+    },
     Some("""
       WITH w AS (
         SELECT doc_id,
@@ -612,9 +612,7 @@ object GraphOps {
     * exact pair graph. */
   val g05 = Q("g05_kcore",
     (s, dir) =>
-      kCorePeel(
-        DedupOps.sharedPairGraph(s, dir, 0.7).select("doc_a", "doc_b"),
-        k = 3, rounds = 3)
+      kCorePeel(DedupOps.sharedPairGraph(s, dir, 0.7), k = 3, rounds = 3)
         .select(col("node").as("doc_id"), col("core_deg"))
         .orderBy("doc_id"),
     Some("""

@@ -120,7 +120,7 @@ object GraphScaleBench {
     // the g01/g04 storage shape: symmetric adjacency bucketed on src
     def bucketedAdjacency(name: String): Int =
       DedupOps.writeBucketedAdjacency(spark, name,
-        edges.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+        edges.select(col("doc_a").as("src"), col("doc_b").as("dst")), m)
 
     if (which == "lpa" || which == "both")
       timed("lpa2")(GraphOps.labelPropagation(edges, iterations = 2).count())

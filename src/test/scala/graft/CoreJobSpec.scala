@@ -75,16 +75,31 @@ class CoreJobSpec extends AnyFunSuite {
     assert(got.map(_._1).toSeq == Seq("c", "b", "a"))
   }
 
-  test("null keys raise the invalid-result error") {
+  /** Runs `spec` over `input` and asserts the failure carries the
+    * taxonomy `name` (in the Spark error or its cause). */
+  private def assertTaxonomy(spec: JobSpec[String, Long], input: Seq[String],
+      name: String): Unit = {
     import spark.implicits._
-    val spec = JobSpec[String, Long]("bad",
-      _ => Seq((null: String) -> 1L),
-      (k, vs) => Iterator.single(k -> vs.sum))
     val ex = intercept[org.apache.spark.SparkException] {
-      MiniJob.transform(spark, spec, Seq("x").toDS()).collect()
+      MiniJob.transform(spark, spec, input.toDS()).collect()
     }
-    assert(ex.getMessage.contains("invalid_result_format") ||
-      ex.getCause != null)
+    assert(ex.getMessage.contains(name) ||
+      Option(ex.getCause).exists(_.getMessage.contains(name)),
+      s"${spec.name}: ${ex.getMessage}")
+  }
+
+  private val sumReducer: (String, Iterator[Long]) => IterableOnce[(String, Long)] =
+    (k, vs) => Iterator.single(k -> vs.sum)
+  private val countMapper: String => IterableOnce[(String, Long)] =
+    line => Seq(line -> 1L)
+
+  test("null keys raise the invalid-result error") {
+    assertTaxonomy(JobSpec[String, Long]("bad",
+      _ => Seq((null: String) -> 1L), sumReducer),
+      Seq("x"), "invalid_result_format")
+    assertTaxonomy(JobSpec[String, Long]("rbad",
+      countMapper, (_, vs) => Iterator.single((null: String) -> vs.sum)),
+      Seq("x"), "invalid_result_format")
   }
 
   test("context-threading form binds contexts") {
@@ -110,42 +125,30 @@ class CoreJobSpec extends AnyFunSuite {
   }
 
   test("crashing user functions surface as user_function_crashed") {
-    import spark.implicits._
-    val spec = JobSpec[String, Long]("boom",
+    assertTaxonomy(JobSpec[String, Long]("boom",
       line => { if (line.nonEmpty) sys.error("mapper exploded"); Nil },
-      (k, vs) => Iterator.single(k -> vs.sum))
-    val ex = intercept[org.apache.spark.SparkException] {
-      MiniJob.transform(spark, spec, Seq("x").toDS()).collect()
-    }
-    assert(ex.getMessage.contains("user_function_crashed") ||
-      Option(ex.getCause).exists(_.getMessage.contains("user_function_crashed")))
+      sumReducer), Seq("x"), "user_function_crashed")
+    assertTaxonomy(JobSpec[String, Long]("rboom",
+      countMapper, (k, _) => { if (k.nonEmpty) sys.error("reducer exploded"); Nil }),
+      Seq("x"), "user_function_crashed")
   }
 
   test("lazily-crashing mapper output is still classified user_function_crashed") {
-    import spark.implicits._
     // the mapper call returns instantly; the crash fires during ITERATION
-    val spec = JobSpec[String, Long]("lazyboom",
+    assertTaxonomy(JobSpec[String, Long]("lazyboom",
       line => line.split(" ").iterator.map { w =>
         if (w == "boom") sys.error("lazy exploded"); w -> 1L
       },
-      (k, vs) => Iterator.single(k -> vs.sum))
-    val ex = intercept[org.apache.spark.SparkException] {
-      MiniJob.transform(spark, spec, Seq("a boom c").toDS()).collect()
-    }
-    assert(ex.getMessage.contains("user_function_crashed") ||
-      Option(ex.getCause).exists(_.getMessage.contains("user_function_crashed")))
+      sumReducer), Seq("a boom c"), "user_function_crashed")
   }
 
   test("null-returning user functions surface as unexpected_return_type") {
-    import spark.implicits._
-    val spec = JobSpec[String, Long]("nullret",
-      _ => (null: Seq[(String, Long)]),
-      (k, vs) => Iterator.single(k -> vs.sum))
-    val ex = intercept[org.apache.spark.SparkException] {
-      MiniJob.transform(spark, spec, Seq("x").toDS()).collect()
-    }
-    assert(ex.getMessage.contains("unexpected_return_type") ||
-      Option(ex.getCause).exists(_.getMessage.contains("unexpected_return_type")))
+    assertTaxonomy(JobSpec[String, Long]("nullret",
+      _ => (null: Seq[(String, Long)]), sumReducer),
+      Seq("x"), "unexpected_return_type")
+    assertTaxonomy(JobSpec[String, Long]("rnullret",
+      countMapper, (_, _) => (null: Seq[(String, Long)])),
+      Seq("x"), "unexpected_return_type")
   }
 
   test("json sink escapes control characters and quotes") {

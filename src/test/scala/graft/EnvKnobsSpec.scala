@@ -8,8 +8,8 @@ import scala.jdk.CollectionConverters._
 /** Every `SPARK_GRAFT_*` environment knob the code reads is documented in
   * README's knob table, and every documented knob is still read: a new
   * knob fails here until it is documented. Operator and streaming code
-  * also keeps no process-global mutable state: a test hook or counter
-  * there is shared by every query and stream in the JVM. */
+  * also keeps no process-global mutable state: a test hook, counter or
+  * memo there is shared by every query and stream in the JVM. */
 class EnvKnobsSpec extends AnyFunSuite {
 
   private val root = Paths.get(sys.props("user.dir"))
@@ -33,17 +33,30 @@ class EnvKnobsSpec extends AnyFunSuite {
       s"documented but unused: ${(documented -- used).toSeq.sorted.mkString(", ")}")
   }
 
-  test("operators and streaming hold no @volatile or private[graft] var") {
-    val global = """@volatile|private\[graft\] var""".r
-    val hits = Seq("src/main/scala/graft/operators",
+  /** `file:line: text` of every operator or streaming source line that
+    * `pattern` matches. */
+  private def operatorHits(pattern: scala.util.matching.Regex): Seq[String] =
+    Seq("src/main/scala/graft/operators",
         "src/main/scala/graft/streaming").flatMap(filesUnder).sorted
       .flatMap { p =>
         read(p).linesIterator.zipWithIndex.collect {
-          case (line, i) if global.findFirstIn(line).isDefined =>
+          case (line, i) if pattern.findFirstIn(line).isDefined =>
             s"${root.relativize(p)}:${i + 1}: ${line.trim}"
         }
       }
+
+  test("operators and streaming hold no @volatile or private[graft] var") {
+    val hits = operatorHits("""@volatile|private\[graft\] var""".r)
     assert(hits.isEmpty,
       s"process-global mutable state in operator code:\n${hits.mkString("\n")}")
+  }
+
+  test("operators and streaming hold no concurrent or mutable map or set") {
+    // a memo shared across queries belongs in the session catalog, not
+    // in a JVM-wide collection
+    val hits = operatorHits(
+      """TrieMap|ConcurrentHashMap|mutable\.(Map|HashMap|Set|HashSet)\b""".r)
+    assert(hits.isEmpty,
+      s"mutable collection in operator code:\n${hits.mkString("\n")}")
   }
 }
