@@ -84,6 +84,13 @@ object Session {
       // (DedupOps.exactVerify): at sf10 that is ~600 MB serialized, over
       // the 1g default that caps driver-side broadcast collection
       .config("spark.driver.maxResultSize", "4g")
+      // file: without a forked chmod/readlink per create, mkdir and
+      // rename (core/LocalFs.scala): checkpoint and state-store commits,
+      // table and sink writes. Executors inherit spark.hadoop.* keys.
+      .config("spark.hadoop.fs.file.impl",
+        classOf[core.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[core.ForkFreeLocalFs].getName)
       // Iterative operators (CC/LPA/k-core/PageRank) re-materialize their
       // frame each round; the previous round's checkpoint blocks and
       // shuffle files become garbage the moment the var is reassigned,

@@ -1495,13 +1495,20 @@ object DedupOps {
     adj.filter(col("src") < col("dst"))
       .select(col("src").as("doc_a"), col("dst").as("doc_b"))
 
-  /** Drops every [[sharedAdjacency]] table, so the next graph-family
-    * query rebuilds its graph from the kernel. */
+  /** Drops every [[sharedAdjacency]] table and deletes its files (an
+    * external table keeps them), so the next graph-family query
+    * rebuilds its graph from the kernel. */
   private[graft] def dropSharedGraphs(s: SparkSession): Unit =
     adjLock.synchronized {
       s.catalog.listTables().collect().map(_.name)
         .filter(_.startsWith(AdjPrefix))
-        .foreach(t => s.sql(s"DROP TABLE IF EXISTS `$t`"))
+        .foreach { t =>
+          val loc = new org.apache.hadoop.fs.Path(s.sessionState.catalog
+            .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
+            .location)
+          s.sql(s"DROP TABLE IF EXISTS `$t`")
+          loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
+        }
     }
 
   /** Writes the undirected edge list `pairs` (src, dst), `m` edges,
@@ -1510,20 +1517,12 @@ object DedupOps {
     * bucketed modes time. Bucket count follows the g01 wedge-width rule
     * (edge-count-derived, floored at shuffle.partitions, capped 4096)
     * so the downstream explosion stages inherit a sane width too.
-    * Returns the bucket count. */
+    * The table is EXTERNAL, at a fresh path under this application's
+    * scratch base (cleaned at JVM exit): a shared `spark-warehouse/`
+    * location let two applications in one working directory delete
+    * each other's tables. Returns the bucket count. */
   private[graft] def writeBucketedAdjacency(s: SparkSession, name: String,
       pairs: DataFrame, m: Long): Int = {
-    // the warehouse DIRECTORY outlives the in-memory catalog: a table
-    // written by a previous application leaves its location on disk
-    // while the fresh catalog has no entry, and saveAsTable then fails
-    // with LOCATION_ALREADY_EXISTS — drop any catalog entry and delete
-    // the stale location first
-    s.sql(s"DROP TABLE IF EXISTS `$name`")
-    val loc = new org.apache.hadoop.fs.Path(
-      s.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(name)))
-    val fs = loc.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
     // core-count floor via defaultNumShufflePartitions (= the
     // shuffle.partitions conf), not numShufflePartitions, which under
     // AQE is the 8×-cores initialPartitionNum — 256 buckets at bench
@@ -1537,6 +1536,7 @@ object DedupOps {
     // (one file per bucket, not one per task×bucket)
     sym.repartition(nBuckets, col("src"))
       .write.mode("overwrite").bucketBy(nBuckets, "src").sortBy("src")
+      .option("path", Materialize.freshScratchPath(s, name))
       .saveAsTable(name)
     nBuckets
   }

@@ -476,8 +476,10 @@ object FaultInject {
   }
 }
 
-/** The streamdriver victim's fault: a `file:` filesystem that performs
-  * the armed path's N-th delete and then halts the JVM (`Runtime.halt`
+/** The streamdriver victim's fault: the engine's `file:` filesystem
+  * ([[graft.core.ForkFreeLocalFileSystem]], so the commit path under
+  * test is the one that ships) that performs the armed path's N-th
+  * delete and then halts the JVM (`Runtime.halt`
   * — no shutdown hooks, no cleanup). For the view of a staged-swap
   * stream that lands inside `swapSnapshot`'s delete-vs-rename window:
   * staging holds the complete merged snapshot (+ batch marker), the
@@ -485,7 +487,7 @@ object FaultInject {
   * `spark.hadoop.fs.file.impl` with the FS cache disabled — every
   * `getFileSystem` then builds a fresh instance, so the armed path and
   * the delete count live in the companion. */
-final class CrashOnDeleteFs extends org.apache.hadoop.fs.LocalFileSystem {
+final class CrashOnDeleteFs extends graft.core.ForkFreeLocalFileSystem {
   override def delete(f: org.apache.hadoop.fs.Path,
       recursive: Boolean): Boolean = {
     val done = super.delete(f, recursive)

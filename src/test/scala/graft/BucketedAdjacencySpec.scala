@@ -82,4 +82,21 @@ class BucketedAdjacencySpec extends AnyFunSuite {
     val want = GraphOps.triangleCount(pairs).head.getLong(0)
     assert(got == want)
   }
+
+  test("the adjacency lives under this application's scratch and is deleted on drop") {
+    DedupOps.sharedAdjacency(spark, dir)
+    val tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_adj_"))
+    assert(tables.nonEmpty)
+    val locs = tables.map(t => new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location))
+    val fs = locs.head.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    locs.foreach { loc =>
+      assert(loc.toString.contains(spark.sparkContext.applicationId), loc)
+      assert(fs.exists(loc), loc)
+    }
+    DedupOps.dropSharedGraphs(spark)
+    assert(!spark.catalog.listTables().collect().exists(_.name.startsWith("graft_adj_")))
+    locs.foreach(loc => assert(!fs.exists(loc), loc))
+  }
 }

@@ -55,6 +55,24 @@ class CoreJobSpec extends AnyFunSuite {
     assert(calls.value == 3L)
   }
 
+  test("every sort option and unsorted calls the reducer once per key") {
+    import spark.implicits._
+    // enough keys that the range sort samples several partitions
+    val lines = (0 until 50).map(i => (0 until 8).map(j => s"k${i * 8 + j}").mkString(" "))
+    val sorts = Seq(SortOpt.KeyAsc, SortOpt.KeyDesc, SortOpt.ValueAsc,
+      SortOpt.ValueDesc, SortOpt.Default)
+    for (opt <- None +: sorts.map(Some(_))) {
+      val calls = spark.sparkContext.longAccumulator(s"reducer-calls-$opt")
+      val spec = JobSpec[String, Long]("once_per_key",
+        line => line.split(" ").map(_ -> 1L),
+        (k, vs) => { calls.add(1); Iterator.single(k -> vs.sum) }, opt)
+      val out = Files.createTempDirectory("graftjob").toString
+      val res = MiniJob.runOn(spark, spec, lines.toDS(), out)
+      assert(res.entries == 400)
+      assert(calls.value == 400L, s"$opt: ${calls.value} reducer calls for 400 keys")
+    }
+  }
+
   test("unsorted job writes unsorted header") {
     import spark.implicits._
     val lines = Seq("foo bar").toDS()
