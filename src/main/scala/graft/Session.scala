@@ -84,6 +84,15 @@ object Session {
       // (DedupOps.exactVerify): at sf10 that is ~600 MB serialized, over
       // the 1g default that caps driver-side broadcast collection
       .config("spark.driver.maxResultSize", "4g")
+      // Janino-compiled classes live in one JVM-wide cache, sized once by
+      // the first session that generates code. Spark's 100-entry default
+      // is smaller than one dedup pass (d07, d06, d02, p01 generate ~300
+      // compile units), so every pass evicted the previous one's classes
+      // and compiled them all again. One session running all 151 catalog
+      // queries at sf0.001 compiles ~1,900 distinct units (1,891-1,902 over
+      // three sessions; ~2,900 per round at the default), so 4096 holds
+      // the whole catalog with room to spare.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // file: without a forked chmod/readlink per create, mkdir and
       // rename (core/LocalFs.scala): checkpoint and state-store commits,
       // table and sink writes. Executors inherit spark.hadoop.* keys.

@@ -1,6 +1,7 @@
 package graft
 
 import graft.progress.ProgressListener
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Time catalog queries end-to-end through the noop sink (same
   * measurement discipline as [[Bench]] while iterating on a few queries).
@@ -11,10 +12,11 @@ import graft.progress.ProgressListener
   * family sharing a written-once artifact (d06/d15/g01/g04/g05 over the
   * `DedupOps.sharedAdjacency` table) is timed the way a pipeline session
   * pays it: the first query builds the table, the rest read it from the
-  * session catalog. Every query's seconds and scheduled Spark jobs are
-  * printed per run; with two or more runs, the min over the runs after
-  * the first (the first pays JIT and the table build) follows. The per-stage table of the last run closes the
-  * output.
+  * session catalog. Every query's seconds, scheduled Spark jobs and
+  * Janino compiles (generated-code cache misses, JVM-wide) are printed
+  * per run; with two or more runs, the min over the runs after the
+  * first (the first pays JIT, codegen and the table build) follows.
+  * The per-stage table of the last run closes the output.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
@@ -33,16 +35,21 @@ object TimeQuery {
       val (_, completed, failed) = listener.jobCounts
       completed + failed
     }
+    // Janino compiles so far, JVM-wide (a code-cache miss compiles; a
+    // hit does not)
+    def compilesSoFar(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val secs = Array.ofDim[Double](runs, qs.size)
     (0 until runs).foreach { i =>
       // the stage table covers the last run only
       if (i == runs - 1) { listener.drain(spark); listener.reset() }
       qs.zipWithIndex.foreach { case (q, j) =>
         val jobs0 = jobsSoFar()
+        val compiles0 = compilesSoFar()
         val t0 = System.nanoTime()
         q.build(spark, dir).write.mode("overwrite").format("noop").save()
         secs(i)(j) = (System.nanoTime() - t0) / 1e9
-        println(f"[time] ${q.name} run$i: ${secs(i)(j)}%.2f s jobs=${jobsSoFar() - jobs0}")
+        println(f"[time] ${q.name} run$i: ${secs(i)(j)}%.2f s " +
+          f"jobs=${jobsSoFar() - jobs0} compiles=${compilesSoFar() - compiles0}")
       }
     }
     if (runs >= 2) qs.zipWithIndex.foreach { case (q, j) =>

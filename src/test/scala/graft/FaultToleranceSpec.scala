@@ -26,8 +26,10 @@ class FaultToleranceSpec extends AnyFunSuite {
       .foreach(_.stop())
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .appName("graft-retry")
+    // built through Session like every test session, so the shipped
+    // defaults (the JVM-wide codegen cache size among them) hold whichever
+    // suite runs first
+    val spark = Session.builder("graft-retry")
       .master("local[4, 2]") // 4 threads, 2 attempts per task
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
