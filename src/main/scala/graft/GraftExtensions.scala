@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{BitmapAndCardinality, BitmapCardinality, BitmapOrCardinality, CosineSimilarity, DenseBitmapAgg, JaccardSimilarity, MinHashAgg, TopKAgg}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import graft.functions._
+import graft.functions.VectorFunctions.{intLitArg, longLitArg}
 
 /** SparkSessionExtensions hook: registers the engine's native functions
   * for SQL use at session build time —
@@ -16,155 +17,91 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     // whole-operator extension (SURVEY §7.3 tier c): the native as-of join
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectFunction((
-      FunctionIdentifier("cosine_similarity"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_similarity"),
-      exprs => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("jaccard_similarity"),
-      new ExpressionInfo(classOf[JaccardSimilarity].getName, "jaccard_similarity"),
-      exprs => JaccardSimilarity(exprs(0), exprs(1))))
-    // minhash_agg(hash BIGINT[, numHashes INT[, seed BIGINT]]) — the
-    // sketch-shape args must be literals (they fix the aggregation buffer
-    // size); wrong arity or non-literal args fail at analysis, not with a
-    // silently-ignored argument.
-    e.injectFunction((
-      FunctionIdentifier("minhash_agg"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "minhash_agg"),
-      exprs => {
-        // shared literal validation (VectorFunctions.longLitArg/intLitArg):
-        // one definition for every registration path, incl. the
-        // reject-instead-of-truncate Int-range rule
-        import graft.functions.VectorFunctions.{intLitArg, longLitArg}
-        exprs match {
-          case Seq(child) => MinHashAgg(child, 64, 42L).toAggregateExpression()
-          case Seq(child, n) =>
-            MinHashAgg(child, intLitArg(n, "minhash_agg", "numHashes"), 42L)
-              .toAggregateExpression()
-          case Seq(child, n, s) =>
-            MinHashAgg(child, intLitArg(n, "minhash_agg", "numHashes"),
-              longLitArg(s, "minhash_agg", "seed")).toAggregateExpression()
-          case other => throw new IllegalArgumentException(
-            s"minhash_agg takes 1-3 arguments (hash[, numHashes[, seed]]), got ${other.size}")
-        }
-      }))
-    // minhash_sig(whs ARRAY<BIGINT>[, numHashes INT[, seed BIGINT]]) —
-    // the fused per-ROW signature kernel (same hash family and literal
-    // rules as minhash_agg; bit-identical, pinned by MinHashSigSpec).
-    e.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[graft.functions.MinHashSig].getName, "minhash_sig"),
-      exprs => {
-        import graft.functions.VectorFunctions.{intLitArg, longLitArg}
-        exprs match {
-          case Seq(child) => graft.functions.MinHashSig(child, 64, 42L)
-          case Seq(child, n) =>
-            graft.functions.MinHashSig(child,
-              intLitArg(n, "minhash_sig", "numHashes"), 42L)
-          case Seq(child, n, s) =>
-            graft.functions.MinHashSig(child,
-              intLitArg(n, "minhash_sig", "numHashes"),
-              longLitArg(s, "minhash_sig", "seed"))
-          case other => throw new IllegalArgumentException(
-            s"minhash_sig takes 1-3 arguments (whs[, numHashes[, seed]]), got ${other.size}")
-        }
-      }))
-    // dense_bitmap_agg(id BIGINT/INT, nBits INT literal) + bitmap
-    // cardinality arithmetic — the audience-store primitive; nBits must
-    // be a literal (it bounds the aggregation state).
-    e.injectFunction((
-      FunctionIdentifier("dense_bitmap_agg"),
-      new ExpressionInfo(classOf[DenseBitmapAgg].getName, "dense_bitmap_agg"),
-      exprs => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        exprs match {
-          case Seq(child) => DenseBitmapAgg(child, 1 << 22).toAggregateExpression()
-          case Seq(child, Literal(n: Int, _: org.apache.spark.sql.types.IntegerType)) =>
-            DenseBitmapAgg(child, n).toAggregateExpression()
-          case Seq(_, other) => throw new IllegalArgumentException(
-            s"dense_bitmap_agg: nBits must be an integer literal, got ${other.sql}")
-          case other => throw new IllegalArgumentException(
-            s"dense_bitmap_agg takes 1-2 arguments (id[, nBits]), got ${other.size}")
-        }
-      }))
-    e.injectFunction((
-      FunctionIdentifier("bitmap_cardinality"),
-      new ExpressionInfo(classOf[BitmapCardinality].getName, "bitmap_cardinality"),
-      exprs => BitmapCardinality(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("bitmap_and_cardinality"),
-      new ExpressionInfo(classOf[BitmapAndCardinality].getName, "bitmap_and_cardinality"),
-      exprs => BitmapAndCardinality(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("bitmap_or_cardinality"),
-      new ExpressionInfo(classOf[BitmapOrCardinality].getName, "bitmap_or_cardinality"),
-      exprs => BitmapOrCardinality(exprs(0), exprs(1))))
-    // mg_sketch(key STRING, k INT literal) — Misra–Gries heavy-hitter
-    // candidate summary (STRUCT<total, keys>); k must be a literal (it
-    // bounds the aggregation state).
-    e.injectFunction((
-      FunctionIdentifier("mg_sketch"),
-      new ExpressionInfo(classOf[graft.functions.MisraGriesAgg].getName, "mg_sketch"),
-      exprs => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        exprs match {
-          case Seq(child, Literal(k: Int, _: org.apache.spark.sql.types.IntegerType)) =>
-            graft.functions.MisraGriesAgg(child, k).toAggregateExpression()
-          case Seq(_, other) => throw new IllegalArgumentException(
-            s"mg_sketch: k must be an integer literal, got ${other.sql}")
-          case other => throw new IllegalArgumentException(
-            s"mg_sketch takes 2 arguments (key, k), got ${other.size}")
-        }
-      }))
-    // kll_agg(value DOUBLE[, k INT literal]) / kll_union_agg(sketch
-    // BINARY[, k]) / kll_quantile(sketch, q) / kll_rank(sketch, v) —
-    // mergeable quantile sketches; k bounds the aggregation state.
-    locally {
-      import org.apache.spark.sql.catalyst.expressions.Literal
-      import graft.functions.{KllAgg, KllDoublesAgg, KllQuantile, KllRank, KllUnionAgg}
-      def kOf(exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-          name: String): Int = exprs match {
-        case Seq(_) => KllAgg.DefaultK
-        case Seq(_, Literal(k: Int, _: org.apache.spark.sql.types.IntegerType)) => k
-        case Seq(_, other) => throw new IllegalArgumentException(
-          s"$name: k must be an integer literal, got ${other.sql}")
-        case other => throw new IllegalArgumentException(
-          s"$name takes 1-2 arguments, got ${other.size}")
-      }
-      e.injectFunction((
-        FunctionIdentifier("kll_agg"),
-        new ExpressionInfo(classOf[KllDoublesAgg].getName, "kll_agg"),
-        exprs => KllDoublesAgg(exprs.head, kOf(exprs, "kll_agg")).toAggregateExpression()))
-      e.injectFunction((
-        FunctionIdentifier("kll_union_agg"),
-        new ExpressionInfo(classOf[KllUnionAgg].getName, "kll_union_agg"),
-        exprs => KllUnionAgg(exprs.head, kOf(exprs, "kll_union_agg")).toAggregateExpression()))
-      e.injectFunction((
-        FunctionIdentifier("kll_quantile"),
-        new ExpressionInfo(classOf[KllQuantile].getName, "kll_quantile"),
-        exprs => KllQuantile(exprs(0), exprs(1))))
-      e.injectFunction((
-        FunctionIdentifier("kll_rank"),
-        new ExpressionInfo(classOf[KllRank].getName, "kll_rank"),
-        exprs => KllRank(exprs(0), exprs(1))))
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
     }
-    // topk_agg(sort, payload, k INT) — sort/payload take any orderable
-    // atomic type (STRING/BIGINT/INT/DOUBLE/DATE/TIMESTAMP, checked by
-    // the aggregate's own type check); k must be a literal (it bounds
-    // the aggregation state); wrong arity fails at analysis.
-    e.injectFunction((
-      FunctionIdentifier("topk_agg"),
-      new ExpressionInfo(classOf[TopKAgg].getName, "topk_agg"),
-      exprs => {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        exprs match {
-          case Seq(sort, payload, Literal(k: Int, _: org.apache.spark.sql.types.IntegerType)) =>
-            TopKAgg(sort, payload, k).toAggregateExpression()
-          case Seq(_, _, other) => throw new IllegalArgumentException(
-            s"topk_agg: k must be an integer literal, got ${other.sql}")
-          case other => throw new IllegalArgumentException(
-            s"topk_agg takes 3 arguments (sort, payload, k), got ${other.size}")
-        }
-      }))
   }
+}
+
+object GraftExtensions {
+  type Builder = Seq[Expression] => Expression
+
+  /** One entry per SQL name: its arity cases; any other arity fails at
+    * analysis with "`name` takes `args`, got n". */
+  private def fn(name: String, cls: Class[_], args: String)(
+      cases: PartialFunction[Seq[Expression], Expression]): (String, Class[_], Builder) =
+    (name, cls, exprs => cases.applyOrElse(exprs, (other: Seq[Expression]) =>
+      throw new IllegalArgumentException(s"$name takes $args, got ${other.size}")))
+
+  /** Every SQL function a graft session offers. Sketch-shape arguments
+    * (`numHashes`, `seed`, `nBits`, `k`) must be integer literals — they
+    * fix the aggregation buffer or signature width at analysis time — and
+    * all go through `intLitArg`/`longLitArg`. */
+  private[graft] val functions: Seq[(String, Class[_], Builder)] = Seq(
+    fn("cosine_similarity", classOf[CosineSimilarity], "2 arguments (a, b)") {
+      case Seq(a, b) => CosineSimilarity(a, b)
+    },
+    fn("jaccard_similarity", classOf[JaccardSimilarity], "2 arguments (a, b)") {
+      case Seq(a, b) => JaccardSimilarity(a, b)
+    },
+    // MinHash over (doc, hash) rows, and the fused per-ROW signature
+    // kernel (same hash family; bit-identical, pinned by MinHashSigSpec)
+    fn("minhash_agg", classOf[MinHashAgg],
+        "1-3 arguments (hash[, numHashes[, seed]])") {
+      case Seq(h) => MinHashAgg(h, 64, 42L).toAggregateExpression()
+      case Seq(h, n) =>
+        MinHashAgg(h, intLitArg(n, "minhash_agg", "numHashes"), 42L).toAggregateExpression()
+      case Seq(h, n, s) => MinHashAgg(h, intLitArg(n, "minhash_agg", "numHashes"),
+        longLitArg(s, "minhash_agg", "seed")).toAggregateExpression()
+    },
+    fn("minhash_sig", classOf[MinHashSig], "1-3 arguments (whs[, numHashes[, seed]])") {
+      case Seq(w) => MinHashSig(w, 64, 42L)
+      case Seq(w, n) => MinHashSig(w, intLitArg(n, "minhash_sig", "numHashes"), 42L)
+      case Seq(w, n, s) => MinHashSig(w, intLitArg(n, "minhash_sig", "numHashes"),
+        longLitArg(s, "minhash_sig", "seed"))
+    },
+    // the audience-store primitive and its cardinality arithmetic
+    fn("dense_bitmap_agg", classOf[DenseBitmapAgg], "1-2 arguments (id[, nBits])") {
+      case Seq(id) => DenseBitmapAgg(id, 1 << 22).toAggregateExpression()
+      case Seq(id, n) =>
+        DenseBitmapAgg(id, intLitArg(n, "dense_bitmap_agg", "nBits")).toAggregateExpression()
+    },
+    fn("bitmap_cardinality", classOf[BitmapCardinality], "1 argument (bitmap)") {
+      case Seq(b) => BitmapCardinality(b)
+    },
+    fn("bitmap_and_cardinality", classOf[BitmapAndCardinality], "2 arguments (a, b)") {
+      case Seq(a, b) => BitmapAndCardinality(a, b)
+    },
+    fn("bitmap_or_cardinality", classOf[BitmapOrCardinality], "2 arguments (a, b)") {
+      case Seq(a, b) => BitmapOrCardinality(a, b)
+    },
+    // Misra–Gries heavy-hitter candidate summary (STRUCT<total, keys>)
+    fn("mg_sketch", classOf[MisraGriesAgg], "2 arguments (key, k)") {
+      case Seq(key, k) =>
+        MisraGriesAgg(key, intLitArg(k, "mg_sketch", "k")).toAggregateExpression()
+    },
+    // mergeable KLL quantile sketches
+    fn("kll_agg", classOf[KllDoublesAgg], "1-2 arguments (value[, k])") {
+      case Seq(v) => KllDoublesAgg(v, KllAgg.DefaultK).toAggregateExpression()
+      case Seq(v, k) =>
+        KllDoublesAgg(v, intLitArg(k, "kll_agg", "k")).toAggregateExpression()
+    },
+    fn("kll_union_agg", classOf[KllUnionAgg], "1-2 arguments (sketch[, k])") {
+      case Seq(sk) => KllUnionAgg(sk, KllAgg.DefaultK).toAggregateExpression()
+      case Seq(sk, k) =>
+        KllUnionAgg(sk, intLitArg(k, "kll_union_agg", "k")).toAggregateExpression()
+    },
+    fn("kll_quantile", classOf[KllQuantile], "2 arguments (sketch, q)") {
+      case Seq(sk, q) => KllQuantile(sk, q)
+    },
+    fn("kll_rank", classOf[KllRank], "2 arguments (sketch, v)") {
+      case Seq(sk, v) => KllRank(sk, v)
+    },
+    // bounded top-K heap: sort/payload take any orderable atomic type
+    // (checked by the aggregate's own type check)
+    fn("topk_agg", classOf[TopKAgg], "3 arguments (sort, payload, k)") {
+      case Seq(sort, payload, k) =>
+        TopKAgg(sort, payload, intLitArg(k, "topk_agg", "k")).toAggregateExpression()
+    })
 }

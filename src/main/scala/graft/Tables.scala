@@ -143,6 +143,6 @@ object Tables {
   /** Register all tables as temp views named after the table (idempotent).
     * Lets catalog queries use `spark.table("lineitem")` / `spark.sql`.
     */
-  def registerViews(spark: SparkSession, sfDir: String): Unit =
+  def createViews(spark: SparkSession, sfDir: String): Unit =
     names.foreach(n => df(spark, sfDir, n).createOrReplaceTempView(n))
 }

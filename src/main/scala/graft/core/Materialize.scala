@@ -67,11 +67,11 @@ object Materialize {
       .orElse(s.conf.getOption(s"spark.$ScratchKey"))
       .getOrElse(s"${System.getProperty("java.io.tmpdir")}/graft-scratch") +
       "/" + s.sparkContext.applicationId
-    registerCleanup(s, base)
+    cleanupOnShutdown(s, base)
     base
   }
 
-  private def registerCleanup(s: SparkSession, base: String): Unit =
+  private def cleanupOnShutdown(s: SparkSession, base: String): Unit =
     cleanupHooks.getOrElseUpdate(base, {
       val hconf =
         new org.apache.hadoop.conf.Configuration(s.sparkContext.hadoopConfiguration)
@@ -115,16 +115,8 @@ object Materialize {
   def observed(df: DataFrame, hint: String,
       metrics: Seq[Column]): (DataFrame, Map[String, Any]) = {
     require(metrics.nonEmpty, "observed() needs at least one metric")
-    val s = df.sparkSession
     val obs = org.apache.spark.sql.Observation()
-    val withObs = df.observe(obs, metrics.head, metrics.tail: _*)
-    val reliable = mode(s) == "reliable"
-    val out =
-      if (reliable) {
-        val p = freshScratchPath(s, hint)
-        withObs.write.mode("overwrite").parquet(p)
-        s.read.parquet(p)
-      } else withObs.localCheckpoint()
+    val out = apply(df.observe(obs, metrics.head, metrics.tail: _*), hint)
     // the materialize was eager, so the metrics are already on their way
     // through the listener bus; a bounded wait turns a lost delivery into
     // a loud failure instead of a hang

@@ -3,8 +3,9 @@ package graft.core
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, LinkedBlockingDeque, TimeUnit}
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Per-phase task progress: `{completed}/{total}`, the reference's
@@ -56,7 +57,9 @@ final case class SystemStatus(
   *
   * What maps where:
   *   - the GenServer state (`job_specs` / `job_executions` / queues) →
-  *     plain concurrent maps; Scala's types replace the reference's
+  *     one job table (`infos`, whose statuses every list and count reads)
+  *     plus a JDK `ThreadPoolExecutor` with `maxConcurrentJobs` threads
+  *     over a bounded queue; Scala's types replace the reference's
   *     `is_struct(job, JobSpec)` runtime check at compile time;
   *   - per-phase progress casts (`{:job_progress, id, phase, done, total}`)
   *     → a SparkListener scoped by job group: each runner tags its Spark
@@ -83,28 +86,22 @@ final class MiniHadoopApi(
     maxQueueSize: Int = 10) extends AutoCloseable {
   require(maxConcurrentJobs >= 1, "maxConcurrentJobs must be >= 1")
 
-  private final case class Queued(jobId: String, thunk: () => JobResult)
-
-  private val seq = new AtomicLong()
   private val infos = new ConcurrentHashMap[String, JobInfo]()
   /** Monitor signalled when a runner is done with a job (terminal status
-    * set, running list updated); `awaitJob` waits on it. */
+    * set); `awaitJob` waits on it. */
   private val finished = new Object
-  // Bounded at the queue itself so the `queue_full` check is atomic: the
-  // reference serializes submits through a GenServer; here concurrent
-  // submitters race, and a check-then-put against an unbounded deque can
-  // overfill at the boundary. Capacity is maxQueueSize + 1 because the
-  // reference rejects only when the pending count already EXCEEDS the
-  // cap (`compute_operation.ex:113`).
-  private val pending = new LinkedBlockingDeque[Queued](maxQueueSize + 1)
-  private val pendingIds = new ConcurrentHashMap[String, java.lang.Boolean]()
-  private val runningIds = new ConcurrentHashMap[String, java.lang.Boolean]()
-  private val submitted = new AtomicLong()
-  private val completed = new AtomicLong()
-  private val failed = new AtomicLong()
-  private val poisonedFlag =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-  @volatile private var closed = false
+  private val poisonedFlag = new AtomicReference[String]()
+
+  // Capacity is maxQueueSize + 1 because the reference rejects only when
+  // the pending count already EXCEEDS the cap (`compute_operation.ex:113`);
+  // `enqueue` checks that bound under its lock, the capacity is a backstop.
+  private val pool = new ThreadPoolExecutor(maxConcurrentJobs, maxConcurrentJobs,
+    0L, TimeUnit.MILLISECONDS, new LinkedBlockingQueue[Runnable](maxQueueSize + 1),
+    (r: Runnable) => {
+      val t = new Thread(r, "minihadoop-runner")
+      t.setDaemon(true)
+      t
+    })
 
   // ---- progress listener (job-group-scoped stage → phase counters) ----
   private val stagePhase = new ConcurrentHashMap[Int, (String, String)]()
@@ -164,78 +161,43 @@ final class MiniHadoopApi(
       }
     }.toMap
 
-  // ---- runner pool --------------------------------------------------
-  private val runners = (1 to maxConcurrentJobs).map { i =>
-    val t = new Thread(() => runLoop(), s"minihadoop-runner-$i")
-    t.setDaemon(true)
-    t.start()
-    t
-  }
-
-  private def runLoop(): Unit =
-    while (!closed) {
-      try {
-        val q = pending.poll(100, TimeUnit.MILLISECONDS)
-        if (q != null) {
-          pendingIds.remove(q.jobId)
-          runJob(q)
-        }
-      } catch {
-        case _: InterruptedException => return // close() interrupts: exit
-        // A FATAL error from a job thunk (OutOfMemoryError, LinkageError)
-        // must not silently kill the runner: runJob has already recorded
-        // the job as failed before rethrowing, so log and keep draining —
-        // a dead runner with maxConcurrentJobs=1 would strand every
-        // queued job in `pending` forever. A VirtualMachineError may
-        // leave the heap/JVM corrupted though, so it additionally sets
-        // the poisoned flag surfaced via systemStatus: the facade stays
-        // up, but callers can see the degraded state instead of a
-        // healthy-looking counter row.
-        case t: Throwable =>
-          System.err.println(
-            s"[minihadoop-runner] fatal error escaped a job: $t")
-          t match {
-            case vm: VirtualMachineError => poisonedFlag.compareAndSet(
-              null, s"${vm.getClass.getSimpleName}: ${vm.getMessage}")
-            case _ =>
-          }
-      }
-    }
-
   private def update(jobId: String)(f: JobInfo => JobInfo): Unit =
     infos.computeIfPresent(jobId, (_, info) => f(info))
 
-  private def runJob(q: Queued): Unit = {
-    runningIds.put(q.jobId, java.lang.Boolean.TRUE)
+  private def runJob(jobId: String, thunk: () => JobResult): Unit = {
     val t0 = System.currentTimeMillis()
-    update(q.jobId)(_.copy(status = "running", startedAt = Some(t0)))
+    update(jobId)(_.copy(status = "running", startedAt = Some(t0)))
     // tag this thread's Spark jobs so the listener attributes stages here
-    spark.sparkContext.setJobGroup(q.jobId, q.jobId, interruptOnCancel = true)
+    spark.sparkContext.setJobGroup(jobId, jobId, interruptOnCancel = true)
     try {
-      val res = q.thunk()
+      val res = thunk()
       val t1 = System.currentTimeMillis()
-      finishJob(q.jobId)(_.copy(status = "completed", completedAt = Some(t1),
+      finishJob(jobId)(_.copy(status = "completed", completedAt = Some(t1),
         elapsedMs = Some(t1 - t0), result = Some(res)))
-      completed.incrementAndGet()
     } catch {
       // Throwable, not NonFatal: an OutOfMemoryError/LinkageError from a
       // thunk must still flip the job to `failed` (a status stuck on
-      // `running` forever is the worse lie) — the fatal then rethrows to
-      // runLoop, which logs and keeps the runner alive.
+      // `running` forever is the worse lie), and the runner thread lives
+      // on to drain the queue. A VirtualMachineError may leave the heap
+      // corrupted though, so it also sets the poisoned flag surfaced via
+      // systemStatus: callers see the degraded state instead of a
+      // healthy-looking counter row.
       case e: Throwable =>
         val t1 = System.currentTimeMillis()
         // M3 taxonomy classes surface verbatim in the polled error field,
         // like the reference's JobExecution.error
-        finishJob(q.jobId)(_.copy(status = "failed", completedAt = Some(t1),
+        finishJob(jobId)(_.copy(status = "failed", completedAt = Some(t1),
           elapsedMs = Some(t1 - t0),
           error = Some(s"${e.getClass.getSimpleName}: ${e.getMessage}")))
-        failed.incrementAndGet()
-        if (!NonFatal(e)) throw e
+        e match {
+          case NonFatal(_) | _: InterruptedException => // close() interrupts
+          case fatal =>
+            System.err.println(s"[minihadoop-runner] fatal error escaped a job: $fatal")
+            if (fatal.isInstanceOf[VirtualMachineError]) poisonedFlag.compareAndSet(
+              null, s"${fatal.getClass.getSimpleName}: ${fatal.getMessage}")
+        }
     } finally {
       spark.sparkContext.clearJobGroup()
-      runningIds.remove(q.jobId)
-      // wake awaitJob callers only now, so a woken caller sees the job
-      // terminal AND off the running list
       finished.synchronized(finished.notifyAll())
     }
   }
@@ -262,10 +224,10 @@ final class MiniHadoopApi(
   }
 
   // ---- public API ---------------------------------------------------
-  /** Enqueue a job; returns `Right(jobId)` immediately or
+  /** Enqueue a job; returns `Right(jobId)` immediately,
     * `Left("queue_full")` past the queue bound (reference semantics:
     * rejected when the PENDING count already exceeds the cap,
-    * `compute_operation.ex:113`). */
+    * `compute_operation.ex:113`) or `Left("shutdown")` after `close()`. */
   def submitJob[K: Encoder, V](spec: JobSpec[K, V], lines: Dataset[String],
       outputDir: String)(
       implicit kvEnc: Encoder[(K, V)]): Either[String, String] =
@@ -274,34 +236,25 @@ final class MiniHadoopApi(
   private val submitLock = new Object
 
   private def enqueue(name: String,
-      thunk: () => JobResult): Either[String, String] = {
-    if (closed) return Left("shutdown")
-    val jobId = f"job_${seq.incrementAndGet()}%04d_$name"
+      thunk: () => JobResult): Either[String, String] =
     // Serialize submitters (the reference's GenServer does the same
-    // implicitly): under the lock, bound-check → publish → offer is one
-    // atomic step, so a REJECTED submit is never transiently visible as
-    // a phantom pending job via jobInfo/listPendingJobs — infos and
-    // pendingIds publish only when the job is certain to land — while
-    // the publish still precedes the offer, so a runner that polls the
-    // job the instant it hits the deque finds its info. Runners only
-    // poll (shrink the queue), so the bound cannot overfill between the
-    // check and the offer; the deque's own capacity stays as a backstop.
+    // implicitly): under the lock, bound-check → publish → execute is one
+    // atomic step, so a REJECTED submit is never transiently visible as a
+    // phantom pending job, while the publish still precedes the execute,
+    // so a runner that takes the job at once finds its info. Runners only
+    // shrink the queue, so it cannot overfill between check and execute.
     submitLock.synchronized {
-      // reference semantics: reject only when the pending count already
-      // EXCEEDS the cap (`compute_operation.ex:113`)
-      if (pending.size > maxQueueSize) return Left("queue_full")
-      infos.put(jobId, JobInfo(jobId, name, "pending",
-        System.currentTimeMillis(), None, None, None, Map.empty, None, None))
-      pendingIds.put(jobId, java.lang.Boolean.TRUE)
-      if (!pending.offer(Queued(jobId, thunk))) { // unreachable given the
-        pendingIds.remove(jobId)                  // bound check; backstop
-        infos.remove(jobId)
-        return Left("queue_full")
+      if (pool.isShutdown) Left("shutdown")
+      else if (pool.getQueue.size > maxQueueSize) Left("queue_full")
+      else {
+        // infos only grows, and only here, so its size numbers the jobs
+        val jobId = f"job_${infos.size + 1}%04d_$name"
+        infos.put(jobId, JobInfo(jobId, name, "pending",
+          System.currentTimeMillis(), None, None, None, Map.empty, None, None))
+        pool.execute(() => runJob(jobId, thunk))
+        Right(jobId)
       }
-      submitted.incrementAndGet()
     }
-    Right(jobId)
-  }
 
   /** Test hook: drive an arbitrary thunk through the same lifecycle
     * (used to pin the fatal-error and queue-bound contracts without a
@@ -353,27 +306,30 @@ final class MiniHadoopApi(
     }
   }
 
-  def listRunningJobs: Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    runningIds.keySet.asScala.toSeq.sorted
-  }
+  private def withStatus(status: String): Seq[String] =
+    infos.values.asScala.collect { case i if i.status == status => i.jobId }
+      .toSeq.sorted
 
-  def listPendingJobs: Seq[String] = {
-    import scala.jdk.CollectionConverters._
-    pendingIds.keySet.asScala.toSeq.sorted
-  }
+  def listRunningJobs: Seq[String] = withStatus("running")
 
-  def systemStatus: SystemStatus =
-    SystemStatus(runningIds.size, pending.size, maxConcurrentJobs,
+  def listPendingJobs: Seq[String] = withStatus("pending")
+
+  /** Every count is read from the job table in one pass, so the four
+    * status counts always add up to the submitted total. */
+  def systemStatus: SystemStatus = {
+    val n = infos.values.asScala.toSeq.groupMapReduce(_.status)(_ => 1L)(_ + _)
+      .withDefaultValue(0L)
+    SystemStatus(n("running").toInt, n("pending").toInt, maxConcurrentJobs,
       spark.sparkContext.defaultParallelism,
-      submitted.get(), completed.get(), failed.get(),
-      Option(poisonedFlag.get()))
+      n.values.sum, n("completed"), n("failed"), Option(poisonedFlag.get()))
+  }
 
-  /** Stop the runner pool and detach the listener. Queued-but-unstarted
-    * jobs stay `pending` forever after close — callers drain first. */
+  /** Stop the runner pool (interrupting running jobs) and detach the
+    * listener. Jobs still waiting in the queue stay `pending` forever
+    * after close, and later submits get `Left("shutdown")` — callers
+    * drain first. */
   override def close(): Unit = {
-    closed = true
-    runners.foreach(_.interrupt())
+    submitLock.synchronized(pool.shutdownNow())
     spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -464,7 +464,7 @@ case class VarintIntersectWithin(first: Expression, second: Expression,
   override def prettyName: String = "varint_intersect_within"
 }
 
-/** Column-level API + SQL registration. */
+/** Column-level API (SQL names are registered by [[graft.GraftExtensions]]). */
 object VectorFunctions {
   import org.apache.spark.sql.graftbridge.Bridge
 
@@ -500,9 +500,8 @@ object VectorFunctions {
 
   /** Shared validation for sketch-shape SQL arguments: they must be
     * integer LITERALS (they fix buffer/signature widths baked in at
-    * analysis time). One definition for every registration path — the
-    * GraftExtensions injections and the temp-function form — so the
-    * rule and its error text cannot drift between them. */
+    * analysis time). Every GraftExtensions entry with such an argument
+    * goes through it, so the rule and its error text are defined once. */
   private[graft] def longLitArg(
       x: org.apache.spark.sql.catalyst.expressions.Expression,
       fn: String, what: String): Long = {
@@ -524,44 +523,5 @@ object VectorFunctions {
     require(v >= Int.MinValue && v <= Int.MaxValue,
       s"$fn: $what out of int range: $v")
     v.toInt
-  }
-
-  /** Register as SQL functions on a session (idempotent). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaccard_similarity", exprs => JaccardSimilarity(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_long_jaccard", exprs => SortedLongJaccard(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "first_common_long", exprs => FirstCommonLong(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_long_intersect_within",
-      exprs => SortedLongIntersectBudget(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "varint_delta_encode", exprs => VarintDeltaEncode(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "varint_intersect_within",
-      exprs => VarintIntersectWithin(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sig", {
-        // SQL form: minhash_sig(whs [, numHashes [, seed]]) — shape
-        // args validated by the shared longLitArg/intLitArg rule, so a
-        // column argument fails with a clear error instead of an eval()
-        // on an unresolved expression, and an out-of-Int-range width is
-        // rejected instead of wrapping
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          exprs match {
-            case Seq(c) => MinHashSig(c, 64, 42L)
-            case Seq(c, k) =>
-              MinHashSig(c, intLitArg(k, "minhash_sig", "numHashes"), 42L)
-            case Seq(c, k, s) => MinHashSig(c,
-              intLitArg(k, "minhash_sig", "numHashes"),
-              longLitArg(s, "minhash_sig", "seed"))
-            case other => throw new IllegalArgumentException(
-              s"minhash_sig takes 1-3 args, got ${other.size}")
-          }
-      }, "built-in")
   }
 }

@@ -687,7 +687,7 @@ object Relational {
     * LATERAL is usable at fact-table row counts. */
   val q29 = Q("q29_lateral_topk",
     (s, dir) => {
-      Tables.registerViews(s, dir)
+      Tables.createViews(s, dir)
       s.sql("""
         SELECT n_name, t.s_name, round(t.s_acctbal, 2) AS bal
         FROM nation,
@@ -709,7 +709,7 @@ object Relational {
     * twin is select(explode(...)) as in t01). */
   val q30 = Q("q30_lateral_view_explode",
     (s, dir) => {
-      Tables.registerViews(s, dir)
+      Tables.createViews(s, dir)
       s.sql("""
         SELECT word, count(*) AS n
         FROM part LATERAL VIEW explode(split(p_type, ' ')) w AS word

@@ -57,7 +57,6 @@ class MinHashSigSpec extends AnyFunSuite {
 
   test("SQL registration and codegen path") {
     import spark.implicits._
-    functions.VectorFunctions.register(spark)
     // a wide frame so the projection runs through whole-stage codegen
     val df = spark.range(2000).select(
       expr(s"transform(sequence(1, 1 + cast(pmod(xxhash64(id), 50) as int)), " +
@@ -90,8 +89,7 @@ class MinHashSigSpec extends AnyFunSuite {
     assert(chain.isNullAt(0))
   }
 
-  test("temp-registration rejects non-literal shape args with a clear message") {
-    functions.VectorFunctions.register(spark)
+  test("SQL minhash_sig rejects non-literal shape args with a clear message") {
     val err = intercept[Exception] {
       spark.sql("SELECT minhash_sig(array(1L), cast(id as int), 42L) " +
         "FROM range(1)").head()

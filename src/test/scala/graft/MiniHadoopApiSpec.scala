@@ -196,4 +196,29 @@ class MiniHadoopApiSpec extends AnyFunSuite {
       assert(api.systemStatus.totalJobsFailed == 1)
     } finally api.close()
   }
+
+  test("after close a queued job stays pending, submits get shutdown, counts add up") {
+    val api = new MiniHadoopApi(spark, maxConcurrentJobs = 1, maxQueueSize = 2)
+    val gate = new CountDownLatch(1)
+    val done = () => graft.core.JobResult("j", "t", sorted = false, entries = 0)
+    try {
+      val running = api.submitRaw("gate")(() => { gate.await(); done() }).toOption.get
+      val deadline = System.currentTimeMillis() + 10000
+      while (!api.listRunningJobs.contains(running) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(10)
+      val queued = api.submitRaw("queued")(done).toOption.get
+      assert(api.listPendingJobs == Seq(queued))
+      api.close()
+      gate.countDown()
+      assert(api.submitRaw("late")(done) == Left("shutdown"))
+      // the running job reaches a terminal status; the queued one never runs
+      assert(api.awaitJob(running, 10000).toOption.get.status != "running")
+      Thread.sleep(200)
+      assert(api.jobInfo(queued).toOption.get.status == "pending")
+      val st = api.systemStatus
+      assert(st.totalJobsSubmitted == 2 && st.pendingJobs == 1 && st.runningJobs == 0)
+      assert(st.runningJobs + st.pendingJobs + st.totalJobsCompleted +
+        st.totalJobsFailed == st.totalJobsSubmitted, st)
+    } finally { gate.countDown(); api.close() }
+  }
 }

@@ -45,7 +45,6 @@ class VectorExpressionsSpec extends AnyFunSuite {
   }
 
   test("SQL registration exposes both functions") {
-    VectorFunctions.register(spark)
     val r = spark.sql(
       """SELECT cosine_similarity(array(1D, 0D), array(1D, 0D)) AS c,
                jaccard_similarity(array('x','y'), array('y','z')) AS j""")
