@@ -99,9 +99,11 @@ object MinHashAgg {
   private val P = 2147483647L // 2^31 − 1, prime
 
   /** The (a_i, b_i) universal-hash family for a given (numHashes, seed) —
-    * THE contract between this aggregate and any expression-space
-    * replication of the signature (graft.streaming.StreamDedup): both
-    * must draw from here or their sketches silently diverge. */
+    * THE contract between this aggregate and the fused per-row kernel
+    * [[MinHashSig]] (pinned bit-identical in MinHashSigSpec): both must
+    * draw from here or their sketches silently diverge. The kernel's one
+    * caller is `DedupOps.lshDocFrame`, which the streaming near-dup gate
+    * also bands through, so no other copy of the signature exists. */
   def hashParams(numHashes: Int, seed: Long): Array[(Long, Long)] = {
     val rnd = new scala.util.Random(seed)
     Array.fill(numHashes)((1 + rnd.nextLong().abs % (P - 1), rnd.nextLong().abs % P))

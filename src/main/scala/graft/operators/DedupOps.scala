@@ -75,13 +75,6 @@ object DedupOps {
       ORDER BY text_hash"""))
 
   // ---------------------------------------------------------------- d02
-  /** MinHash + LSH near-dup pairs (word-shingle Jaccard ≥ 0.9).
-    *
-    * 64 minhashes, 16 bands × 4 rows → P(candidate | j=0.9) ≈ 1 − 3.6e-8,
-    * so the LSH candidate set is effectively complete at the threshold and
-    * the exact-Jaccard verify makes the output equal to the true pair set
-    * — which is why a SQL oracle (plain quadratic Jaccard) can check it.
-    */
   /** Threshold-adaptive LSH banding: the least-volume (bands, rows) on
     * the b×r curve whose per-pair miss probability AT the threshold
     * stays under `targetMiss`. Larger r ⇒ fewer bands ⇒ fewer joined
@@ -104,23 +97,22 @@ object DedupOps {
     (nHashes / r, r)
   }
 
-  /** The exact-verified near-dup pair set (unrounded `jac`): LSH candidates
-    * at the threshold-adaptive banding, then exact Jaccard ≥ `threshold`
-    * on candidates only. Shared by d02 (pair listing) and the streaming
-    * twin. */
-  /** The un-materialized PER-DOC LSH frame (doc_id, bhs, hs, sz) plus
-    * its numBands constant: ONE tokenize pass computes both the band
-    * vector (bhs) and the sorted word-hash set the exact verify needs
-    * (hs) — nearDupPairs materializes THIS once and derives the
-    * exploded band frame and the verify sets from its blocks, where
-    * the earlier shape tokenized the corpus twice (once per
-    * materialize) and stored 16 copies of bhs per doc. At 100 TB one
+  /** The un-materialized PER-DOC LSH frame (doc_id, bhs, hs, sz) of a
+    * (doc_id, text) frame, plus its numBands constant: ONE tokenize pass
+    * computes both the band vector (bhs) and the sorted word-hash set
+    * the exact verify needs (hs) — nearDupPairs materializes THIS once
+    * and derives the exploded band frame and the verify sets from its
+    * blocks, where the earlier shape tokenized the corpus twice (once
+    * per materialize) and stored 16 copies of bhs per doc. At 100 TB one
     * corpus scan instead of two is the dominant term. Empty docs are
-    * dropped (they have no bands and cannot be near-dups). */
-  private[graft] def lshDocFrame(s: SparkSession, dir: String,
+    * dropped (they have no bands and cannot be near-dups). The frame is
+    * a per-row function of `text`, so a streaming frame works too: the
+    * streaming near-dup gate ([[graft.streaming.StreamDedup]]) builds
+    * its index and its probe here. */
+  private[graft] def lshDocFrame(d: DataFrame,
       threshold: Double): (DataFrame, Int) = {
     val P = 2147483647L // 2^31-1, prime
-    val words = docs(s, dir).select(col("doc_id"), wordsExpr.as("words"))
+    val words = d.select(col("doc_id"), wordsExpr.as("words"))
     // scan-local sketch: each doc's word hashes are computed ONCE, then
     // all k per-hash minima are taken in ONE fused pass by the native
     // MinHashSig expression — bit-identical to the MinHashAgg aggregate
@@ -138,10 +130,10 @@ object DedupOps {
       .select(col("doc_id"), col("words"), graft.functions.VectorFunctions
         .minhash_sig(col("whs"), numBands * rowsPerBand, 42L).as("sig"))
     // band key = hash of the band's `rowsPerBand` signature values.
-    // numBands is THE banding constant: bhs and the firstMatch chain in
-    // nearDupPairs both derive from it — diverging copies would silently
-    // drop candidate pairs whose first colliding band is past the
-    // shorter list. hs rides along so the SAME pass also produces the
+    // numBands is THE banding constant: bhs and every [[firstBandMatch]]
+    // chain derive from it — diverging copies would silently drop
+    // candidate pairs whose first colliding band is past the shorter
+    // list. hs rides along so the SAME pass also produces the
     // exact-verify representation (raw xxhash64, sorted).
     val bhs = array((0 until numBands).map { bnd =>
       xxhash64((bnd * rowsPerBand until (bnd + 1) * rowsPerBand).map(i =>
@@ -170,14 +162,31 @@ object DedupOps {
     * band frame plus numBands. */
   private[graft] def lshBands(s: SparkSession, dir: String,
       threshold: Double): (DataFrame, Int) = {
-    val (perDoc, numBands) = lshDocFrame(s, dir, threshold)
+    val (perDoc, numBands) = lshDocFrame(docs(s, dir), threshold)
     (bandsOf(perDoc), numBands)
   }
 
+  /** The first band (0-based) in which two docs' band vectors `x` and `y`
+    * agree, as a CASE WHEN chain over the `numBands` static element
+    * comparisons — stays in whole-stage codegen, where the equivalent
+    * zip_with + array_position formulation is an interpreted
+    * CodegenFallback evaluated once per joined row. A band join keeps a
+    * pair only in the band this returns: exactly-once pair emission
+    * without a distinct. */
+  private[graft] def firstBandMatch(x: Column, y: Column,
+      numBands: Int): Column = {
+    def agree(i: Int) = x.getItem(i) === y.getItem(i)
+    (1 until numBands).foldLeft(when(agree(0), lit(0)))(
+      (chain, i) => chain.when(agree(i), lit(i)))
+  }
+
+  /** The exact-verified near-dup pair set (unrounded `jac`): LSH candidates
+    * at the threshold-adaptive banding, then exact Jaccard ≥ `threshold`
+    * on candidates only. Shared by d02 (t = 0.9) and d12 (t = 0.8). */
   private[graft] def nearDupPairs(s: SparkSession, dir: String,
       threshold: Double = 0.9, maxBucket: Int = 0,
       verifyBroadcast: Option[Boolean] = None): DataFrame = {
-    val (perDoc0, numBands) = lshDocFrame(s, dir, threshold)
+    val (perDoc0, numBands) = lshDocFrame(docs(s, dir), threshold)
     // materialized ONCE (EAGER localCheckpoint): the per-doc frame
     // feeds hot-bucket detection, both sides of the candidate
     // self-join AND both exact-verify sides — without materialization
@@ -229,7 +238,7 @@ object DedupOps {
     // doc in an oversize bucket is by definition hot, so all its
     // intra-bucket pairs are both-hot — but a post-join filter still
     // pays the B² enumeration (a 14k-doc bucket = ~98M joined rows,
-    // each evaluating the 16-way firstMatch chain; measured ~2,500
+    // each evaluating the 16-way firstBandMatch chain; measured ~2,500
     // CPU-seconds at sf1.0 on the template corpus, THE d02 scale
     // bottleneck). Pairs with at least one cold member meet only in
     // ≤ cutoff buckets (a bucket holding a cold doc cannot be
@@ -242,16 +251,6 @@ object DedupOps {
     val flagged = smallBands.join(
       hotDocs.withColumn("hot", lit(true)), Seq("doc_id"), "left")
       .withColumn("hot", coalesce(col("hot"), lit(false)))
-    // first-matching band as a CASE WHEN chain over the 16 static element
-    // comparisons — stays in whole-stage codegen, where the equivalent
-    // zip_with + array_position formulation is an interpreted
-    // CodegenFallback evaluated once per joined row
-    val firstMatch = (0 until numBands)
-      .map(i => (col("x.bhs").getItem(i) === col("y.bhs").getItem(i), lit(i)))
-      .foldLeft(Option.empty[Column]) {
-        case (None, (cond, v)) => Some(when(cond, v))
-        case (Some(acc), (cond, v)) => Some(acc.when(cond, v))
-      }.get
     // SHUFFLE_HASH, not SMJ. Memory model: the SHJ build map holds the
     // y-side's whole shuffle PARTITION (every (band,bh) group hashed
     // there), i.e. ~ exchangeBytes / spark.sql.shuffle.partitions per
@@ -270,7 +269,8 @@ object DedupOps {
     val cand = flagged.alias("x")
       .join(flagged.alias("y").hint("SHUFFLE_HASH"), Seq("band", "bh"))
       .filter(col("x.doc_id") < col("y.doc_id") &&
-        !(col("x.hot") && col("y.hot")) && col("band") === firstMatch)
+        !(col("x.hot") && col("y.hot")) &&
+        col("band") === firstBandMatch(col("x.bhs"), col("y.bhs"), numBands))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
     // the verify sets are a PROJECTION of the already-materialized
     // per-doc frame — no second tokenize scan (empty docs are absent,
@@ -322,27 +322,6 @@ object DedupOps {
         Seq("band", "bh"))
       .select("doc_id").distinct()
 
-  /** Join candidate (doc_a, doc_b) pairs back to their hashed word sets
-    * and keep exactly the pairs with true Jaccard ≥ threshold. The doc
-    * sides are small relative to the pair set (one row per doc) and
-    * broadcast when they fit; the per-pair cost is a primitive merge.
-    * Output carries the INTEGERS behind `jac` — `icnt` (|A∩B|) and `un`
-    * (|A∪B|) — so catalog tails can round the ratio with [[ExactRound]]
-    * instead of engine-dependent `round(double, k)` (the r14 knife-edge
-    * class: jaccard denominators like 32 and 160 divide 2·10⁴, so
-    * exact 4-decimal halves such as 29/32 = 0.90625 are reachable). */
-  // BUDGETED early-exit merge since the PPJoin positional filter landed:
-  // the filter inverted the candidate mix. Pre-filter, prefix/band
-  // candidates were mostly TRUE pairs and the budget bookkeeping only
-  // added cost (measured then: d07 4.4 → 5.3 s, d02 7.1 → 9.0 s, so the
-  // plain fused merge stayed); post-filter the survivors are ~80% FALSE
-  // near-misses (638M candidates vs ~120M true pairs at sf10) that the
-  // budget kills after ~(1−t)·|A| merge steps instead of a full
-  // |A|+|B| walk. Soundness: Jaccard ≥ t needs |A∩B| ≥ I_min =
-  // ⌈t/(1+t)·(|A|+|B|)⌉, so at most |A| − I_min of A's elements may
-  // miss B — one more miss proves J < t, and a non-(−1) return is the
-  // EXACT intersection, so the surviving pairs' jac is bit-identical
-  // to the unbudgeted division.
   /** Salt width for hot posting lists (docs per group). 1024 bounds a
     * task's enumeration at ~GroupB² ≈ 1M pairs (~1 s of verify-shaped
     * work) while keeping the replication overhead ≈ candidates/GroupB —
@@ -356,11 +335,34 @@ object DedupOps {
   private def estOf(m: Map[String, Any]): (Long, Long) =
     (m("est_n").asInstanceOf[Long], m("est_e").asInstanceOf[Long])
 
-  /** `est` is the (row count, Σ|hs|) of `sets`, observed on the
+  /** Join candidate (doc_a, doc_b) pairs back to their hashed word sets
+    * and keep exactly the pairs with true Jaccard ≥ threshold. The doc
+    * sides are small relative to the pair set (one row per doc) and
+    * broadcast when they fit; the per-pair cost is a primitive merge.
+    * Output carries the INTEGERS behind `jac` — `icnt` (|A∩B|) and `un`
+    * (|A∪B|) — so catalog tails can round the ratio with [[ExactRound]]
+    * instead of engine-dependent `round(double, k)` (the r14 knife-edge
+    * class: jaccard denominators like 32 and 160 divide 2·10⁴, so
+    * exact 4-decimal halves such as 29/32 = 0.90625 are reachable).
+    *
+    * `est` is the (row count, Σ|hs|) of `sets`, observed on the
     * caller's materialize action (guide §2.6) — the broadcast-size guard
     * below costs NO scheduled job at all. `verifyBroadcast` forces the
     * broadcast decision (specs pin the shuffle-hash plan with
-    * `Some(false)`); `None` derives it from the size guard. */
+    * `Some(false)`); `None` derives it from the size guard.
+    *
+    * The merge is a BUDGETED early exit since the PPJoin positional
+    * filter landed: the filter inverted the candidate mix. Pre-filter, prefix/band
+    * candidates were mostly TRUE pairs and the budget bookkeeping only
+    * added cost (measured then: d07 4.4 → 5.3 s, d02 7.1 → 9.0 s, so the
+    * plain fused merge stayed); post-filter the survivors are ~80% FALSE
+    * near-misses (638M candidates vs ~120M true pairs at sf10) that the
+    * budget kills after ~(1−t)·|A| merge steps instead of a full
+    * |A|+|B| walk. Soundness: Jaccard ≥ t needs |A∩B| ≥ I_min =
+    * ⌈t/(1+t)·(|A|+|B|)⌉, so at most |A| − I_min of A's elements may
+    * miss B — one more miss proves J < t, and a non-(−1) return is the
+    * EXACT intersection, so the surviving pairs' jac is bit-identical
+    * to the unbudgeted division. */
   private def exactVerify(sets: DataFrame, cand: DataFrame,
       threshold: Double, est: (Long, Long),
       verifyBroadcast: Option[Boolean] = None): DataFrame = {
@@ -781,6 +783,13 @@ object DedupOps {
       ORDER BY doc_id"""
   }
 
+  /** MinHash + LSH near-dup pairs (word-shingle Jaccard ≥ 0.9).
+    *
+    * 64 minhashes, 16 bands × 4 rows → P(candidate | j=0.9) ≈ 1 − 3.6e-8,
+    * so the LSH candidate set is effectively complete at the threshold and
+    * the exact-Jaccard verify makes the output equal to the true pair set
+    * — which is why a SQL oracle (plain quadratic Jaccard) can check it.
+    */
   val d02 = Q("d02_minhash_lsh",
     (s, dir) =>
       nearDupPairs(s, dir)
@@ -1268,29 +1277,6 @@ object DedupOps {
     scaleOracle = Some(replayClustersOracle(0.9)))
 
   // ---------------------------------------------------------------- d07
-  /** EXACT similarity self-join by prefix filtering (the AllPairs /
-    * PPJoin family: Bayardo et al., WWW'07; Vernica et al., SIGMOD'10 for
-    * the MapReduce formulation). Same output as d02 — all pairs with word
-    * Jaccard ≥ 0.9 — but with a completeness GUARANTEE instead of an LSH
-    * recall probability, and a candidate set driven by token rarity
-    * instead of signature collisions.
-    *
-    * Why it scales: order each document's tokens by ascending global
-    * document frequency (rarest first, ties by token). For Jaccard ≥ t a
-    * matching pair MUST share a token within the first
-    * `|d| − ⌈t·|d|⌉ + 1` tokens of this order (pigeonhole on the ≥
-    * t/(1+t)·(|a|+|b|) required overlap), so only the ~10% rarest tokens
-    * of each doc are join keys. Rare tokens have small document
-    * frequency → small buckets → the candidate join is near-linear where
-    * LSH banding on a template-heavy corpus degenerates toward all-pairs
-    * (measured at sf0.1: ~9.0M LSH candidates vs the true 0.96M pairs).
-    * A length filter (min ≥ t·max) prunes further before the exact
-    * merge-verify on sorted hash sets.
-    *
-    * Cost shape at 100 TB: one token-frequency aggregate, one shuffle to
-    * order tokens per doc, one equi-join on rare tokens (AQE-skew-safe),
-    * then O(candidates) primitive verifies — no driver state, no
-    * quadratic stage. */
   /** The duplicate-free candidate stage of d07 (exposed for the
     * exactly-once spec). A pair sharing k prefix tokens appears in k
     * joined rows; the `first_common_long == r` filter keeps only the row
@@ -1321,18 +1307,6 @@ object DedupOps {
     // over the just-checkpointed blocks (guide §2.6)
     val (pref0, prefM) = Materialize.observed(
       rarityPrefix(sets, threshold), "pref", Seq(count(lit(1)).as("n")))
-    // The explicit-N repartition on the posting-list key is load-bearing
-    // (the g01 wedge-apex lesson): the pref frame is only a few MB, so
-    // AQE coalesces its exchange by input bytes — but the self-join
-    // EXPLODES (Σ C(df_h, 2) candidate rows ≫ pref rows), and the
-    // explosion runs on however many tasks own the coalesced partitions
-    // (measured at sf1.0: the d02 hot-set kernel join ran 2-wide,
-    // 26 s/task, ~a third of the query's wall). Pinning hash(h, N) with
-    // N scaled to the pref row count keeps every core on the explosion;
-    // both aliases share the one exchange (ReusedExchange), and at
-    // bench SF the clamp floors N at shuffle.partitions — the plan the
-    // headline numbers were measured on. The count is a sub-second scan
-    // of the just-checkpointed blocks.
     val conf = pref0.sparkSession.sessionState.conf
     // defaultNumShufflePartitions = spark.sql.shuffle.partitions (the
     // documented core-count floor). conf.numShufflePartitions is NOT
@@ -1552,6 +1526,29 @@ object DedupOps {
       est = estOf(m), verifyBroadcast = verifyBroadcast)
   }
 
+  /** EXACT similarity self-join by prefix filtering (the AllPairs /
+    * PPJoin family: Bayardo et al., WWW'07; Vernica et al., SIGMOD'10 for
+    * the MapReduce formulation). Same output as d02 — all pairs with word
+    * Jaccard ≥ 0.9 — but with a completeness GUARANTEE instead of an LSH
+    * recall probability, and a candidate set driven by token rarity
+    * instead of signature collisions.
+    *
+    * Why it scales: order each document's tokens by ascending global
+    * document frequency (rarest first, ties by token). For Jaccard ≥ t a
+    * matching pair MUST share a token within the first
+    * `|d| − ⌈t·|d|⌉ + 1` tokens of this order (pigeonhole on the ≥
+    * t/(1+t)·(|a|+|b|) required overlap), so only the ~10% rarest tokens
+    * of each doc are join keys. Rare tokens have small document
+    * frequency → small buckets → the candidate join is near-linear where
+    * LSH banding on a template-heavy corpus degenerates toward all-pairs
+    * (measured at sf0.1: ~9.0M LSH candidates vs the true 0.96M pairs).
+    * A length filter (min ≥ t·max) prunes further before the exact
+    * merge-verify on sorted hash sets.
+    *
+    * Cost shape at 100 TB: one token-frequency aggregate, one shuffle to
+    * order tokens per doc, one equi-join on rare tokens (AQE-skew-safe),
+    * then O(candidates) primitive verifies — no driver state, no
+    * quadratic stage. */
   val d07 = Q("d07_allpairs_jaccard",
     (s, dir) =>
       prefixFilterPairs(s, dir)
@@ -1564,19 +1561,6 @@ object DedupOps {
     scaleOracle = Some(replayJaccardOracle(0.9, "d07")))
 
   // ---------------------------------------------------------------- d08
-  /** Benchmark decontamination: find corpus documents sharing ≥3 distinct
-    * 8-gram word shingles with any document of a held-out benchmark set —
-    * the overlap test run before training to keep eval data out of the
-    * corpus. (Benchmark stand-in here: doc_id < 50; a real run would load
-    * the eval suites as the `bench` frame.)
-    *
-    * Scale shape: shingling is scan-local expression work (slice +
-    * concat inside codegen, docs shorter than the shingle width drop
-    * out); the only shuffle is the shingle equi-join, and the BENCH side
-    * of it is small by construction (eval suites, not corpora) → Spark
-    * broadcasts it and the corpus streams past once. Shingle strings
-    * would be hashed to int64 at 100 TB to shrink the broadcast; kept as
-    * strings here so the oracle join is byte-exact. */
   /** One row per (id, distinct 8-gram word shingle); shared by the d08
     * broadcast path and the d13 Bloom-pruned path. */
   private def shingleRows(df: DataFrame, idCol: String): DataFrame = df
@@ -1604,6 +1588,19 @@ object DedupOps {
       HAVING count(*) >= 3
       ORDER BY bench_id, doc_id"""
 
+  /** Benchmark decontamination: find corpus documents sharing ≥3 distinct
+    * 8-gram word shingles with any document of a held-out benchmark set —
+    * the overlap test run before training to keep eval data out of the
+    * corpus. (Benchmark stand-in here: doc_id < 50; a real run would load
+    * the eval suites as the `bench` frame.)
+    *
+    * Scale shape: shingling is scan-local expression work (slice +
+    * concat inside codegen, docs shorter than the shingle width drop
+    * out); the only shuffle is the shingle equi-join, and the BENCH side
+    * of it is small by construction (eval suites, not corpora) → Spark
+    * broadcasts it and the corpus streams past once. Shingle strings
+    * would be hashed to int64 at 100 TB to shrink the broadcast; kept as
+    * strings here so the oracle join is byte-exact. */
   val d08 = Q("d08_decontaminate",
     (s, dir) => {
       val d = docs(s, dir)
@@ -1666,31 +1663,6 @@ object DedupOps {
     Some(decontaminateOracleSql))
 
   // ---------------------------------------------------------------- d09
-  /** ASYMMETRIC containment self-join: ordered pairs (a, b) where at
-    * least `threshold` of a's distinct words also appear in b. This is
-    * the subset-duplicate detector the symmetric Jaccard family cannot
-    * express: a paragraph quoted whole inside a 10× longer page has
-    * J ≈ 0.1 but containment 1.0 — exactly the "document swallowed by a
-    * boilerplate wrapper" case a corpus dedup pass must catch.
-    *
-    * Same pigeonhole as d07, applied one-sided: if fewer than
-    * ⌈t·|A|⌉ of A's tokens are missing from B, A must share one of its
-    * `|A| − ⌈t·|A|⌉ + 1` globally-rarest tokens with B — so A explodes
-    * only that rare prefix while B contributes its FULL posting list
-    * (the superset side cannot be pruned, its membership is the
-    * question). A size guard |B| ≥ t·|A| prunes before the exact
-    * verify. |A∩B| is recovered EXACTLY from the verified Jaccard:
-    * I = J·(|A|+|B|)/(1+J) is an integer identity, and the double
-    * round-trip error (~1e-16·I) dies under round(). Containment is
-    * then the same I/|A| division of the same integers on both engines
-    * — bit-identical, so the 0.9 threshold cannot flake. */
-  /** The rarest-prefix join keys shared by d07 and d09: each doc's
-    * `|d| − ⌈t·|d|⌉ + 1` lowest-(document-frequency, hash) tokens, one
-    * row per (doc_id, sz, h). The pigeonhole guarantee: any pair with
-    * ≥ t overlap (Jaccard OR containment-of-the-smaller) must share a
-    * token inside this prefix. The 1e-9 nudge keeps a float ceil from
-    * rounding UP on exact multiples (a shorter prefix loses
-    * completeness; a longer one only adds candidates the verify culls). */
   /** (doc_id, sz, ord) with `ord` the doc's FULL token array sorted by
     * the global rarity rank — the shared upstream of [[rarityPrefix]]
     * (which slices the pigeonhole prefix off it) and of the containment
@@ -1729,6 +1701,13 @@ object DedupOps {
         first(col("sz")).as("sz"))
   }
 
+  /** The rarest-prefix join keys shared by d07 and d09: each doc's
+    * `|d| − ⌈t·|d|⌉ + 1` lowest-(document-frequency, hash) tokens, one
+    * row per (doc_id, sz, h). The pigeonhole guarantee: any pair with
+    * ≥ t overlap (Jaccard OR containment-of-the-smaller) must share a
+    * token inside this prefix. The 1e-9 nudge keeps a float ceil from
+    * rounding UP on exact multiples (a shorter prefix loses
+    * completeness; a longer one only adds candidates the verify culls). */
   private def rarityPrefix(sets: DataFrame, threshold: Double): DataFrame =
     rarityOrdered(sets)
       .withColumn("p", (col("sz") - ceil(col("sz") * threshold - 1e-9) + 1).cast("int"))
@@ -1882,6 +1861,24 @@ object DedupOps {
         col("icnt"), col("sza"))
   }
 
+  /** ASYMMETRIC containment self-join: ordered pairs (a, b) where at
+    * least `threshold` of a's distinct words also appear in b. This is
+    * the subset-duplicate detector the symmetric Jaccard family cannot
+    * express: a paragraph quoted whole inside a 10× longer page has
+    * J ≈ 0.1 but containment 1.0 — exactly the "document swallowed by a
+    * boilerplate wrapper" case a corpus dedup pass must catch.
+    *
+    * Same pigeonhole as d07, applied one-sided: if fewer than
+    * ⌈t·|A|⌉ of A's tokens are missing from B, A must share one of its
+    * `|A| − ⌈t·|A|⌉ + 1` globally-rarest tokens with B — so A explodes
+    * only that rare prefix while B contributes its FULL posting list
+    * (the superset side cannot be pruned, its membership is the
+    * question). A size guard |B| ≥ t·|A| prunes before the exact
+    * verify. |A∩B| is recovered EXACTLY from the verified Jaccard:
+    * I = J·(|A|+|B|)/(1+J) is an integer identity, and the double
+    * round-trip error (~1e-16·I) dies under round(). Containment is
+    * then the same I/|A| division of the same integers on both engines
+    * — bit-identical, so the 0.9 threshold cannot flake. */
   val d09 = Q("d09_containment",
     (s, dir) =>
       containmentPairs(s, dir)

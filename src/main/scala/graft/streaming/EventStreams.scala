@@ -22,7 +22,37 @@ object EventStreams {
   final case class Event(event_id: Long, ts: java.sql.Timestamp,
       user_id: Long, event_type: String, value: Double)
 
-  final case class SessionState(start_us: Long, last_us: Long, n: Long)
+  final case class SessionState(start_us: Long, last_us: Long, n: Long) {
+    def asSession(userId: Long): Session =
+      Session(userId, start_us, last_us, n, complete = true)
+  }
+
+  object SessionState {
+    /** The gap fold both sessionizers share: one micro-batch of a user's
+      * events, sorted by (ts, event_id), folded into the `open` session.
+      * Returns the sessions an idle gap longer than `gapUs` closed and the
+      * session left open. It lives on this companion, not on
+      * [[EventStreams]], so a sessionizer's `update` closure does not
+      * capture the (non-serializable) enclosing object. */
+    def fold(userId: Long, events: Iterator[Event], open: Option[SessionState],
+        gapUs: Long): (Seq[Session], Option[SessionState]) = {
+      val closed = Seq.newBuilder[Session]
+      val last = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
+        .foldLeft(open) { (cur, e) =>
+          val us = e.ts.getTime * 1000L
+          cur match {
+            case Some(s) if us - s.last_us > gapUs =>
+              closed += s.asSession(userId)
+              Some(SessionState(us, us, 1))
+            case Some(s) =>
+              Some(s.copy(last_us = math.max(s.last_us, us), n = s.n + 1))
+            case None =>
+              Some(SessionState(us, us, 1))
+          }
+        }
+      (closed.result(), last)
+    }
+  }
 
   final case class Session(user_id: Long, start_us: Long, end_us: Long,
       n_events: Long, complete: Boolean)
@@ -146,22 +176,8 @@ object EventStreams {
 
     def update(userId: Long, it: Iterator[Event],
         state: GroupState[SessionState]): Iterator[Session] = {
-      val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var cur = state.getOption
-      val closed = scala.collection.mutable.ArrayBuffer[Session]()
-      sorted.foreach { e =>
-        val us = e.ts.getTime * 1000L
-        cur match {
-          case Some(s) if us - s.last_us > gapUs =>
-            closed += Session(userId, s.start_us, s.last_us, s.n, complete = true)
-            cur = Some(SessionState(us, us, 1))
-          case Some(s) =>
-            cur = Some(s.copy(last_us = math.max(s.last_us, us), n = s.n + 1))
-          case None =>
-            cur = Some(SessionState(us, us, 1))
-        }
-      }
-      cur.foreach(state.update)
+      val (closed, open) = SessionState.fold(userId, it, state.getOption, gapUs)
+      open.foreach(state.update)
       closed.iterator
     }
 
@@ -185,41 +201,26 @@ object EventStreams {
         // watermark passed the gap deadline → close and evict
         val s = state.get
         state.remove()
-        return Iterator.single(
-          Session(userId, s.start_us, s.last_us, s.n, complete = true))
+        return Iterator.single(s.asSession(userId))
       }
-      val sorted = it.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-      var cur = state.getOption
-      val closed = scala.collection.mutable.ArrayBuffer[Session]()
-      sorted.foreach { e =>
-        val us = e.ts.getTime * 1000L
-        cur match {
-          case Some(s) if us - s.last_us > gapUs =>
-            closed += Session(userId, s.start_us, s.last_us, s.n, complete = true)
-            cur = Some(SessionState(us, us, 1))
-          case Some(s) =>
-            cur = Some(s.copy(last_us = math.max(s.last_us, us), n = s.n + 1))
-          case None =>
-            cur = Some(SessionState(us, us, 1))
-        }
-      }
-      cur.foreach { s =>
-        // close when event time reaches last_us + gap. flatMapGroupsWithState
-        // does NOT drop late rows, so a batch of events already more than
-        // `gap` behind the watermark would yield a deadline <= watermark,
-        // which Spark rejects (IllegalArgumentException kills the query).
-        // Such a session is already over in event time: emit it now instead
-        // of registering an un-settable timeout.
+      val (closed, open) = SessionState.fold(userId, it, state.getOption, gapUs)
+      // close when event time reaches last_us + gap. flatMapGroupsWithState
+      // does NOT drop late rows, so a batch of events already more than
+      // `gap` behind the watermark would yield a deadline <= watermark,
+      // which Spark rejects (IllegalArgumentException kills the query).
+      // Such a session is already over in event time: emit it now instead
+      // of registering an un-settable timeout.
+      open.fold(closed) { s =>
         val deadlineMs = s.last_us / 1000L + gapMinutes * 60L * 1000L
         if (deadlineMs <= state.getCurrentWatermarkMs()) {
-          closed += Session(userId, s.start_us, s.last_us, s.n, complete = true)
           state.remove()
+          closed :+ s.asSession(userId)
         } else {
           state.update(s)
           state.setTimeoutTimestamp(deadlineMs)
+          closed
         }
-      }
-      closed.iterator
+      }.iterator
     }
 
     events
@@ -477,11 +478,5 @@ object EventStreams {
       require(fs.rename(staging, target),
         s"swapSnapshot: rename failed for $tablePath")
     }
-  }
-
-  /** Convenience: stream the events parquet as a file source. */
-  def readEventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val schema = graft.Tables.df(spark, sfDir, "events").schema
-    spark.readStream.schema(schema).parquet(s"$sfDir/events.parquet")
   }
 }

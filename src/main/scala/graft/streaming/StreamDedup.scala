@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.functions.MinHashAgg
 import graft.functions.VectorFunctions.sorted_long_jaccard
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.DedupOps.{firstBandMatch, lshDocFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Streaming near-duplicate detection against a STATIC reference corpus —
@@ -12,91 +12,50 @@ import org.apache.spark.sql.functions._
   * The whole pipeline is STATELESS stream-static work, which is what
   * makes it deployable at ingest scale: the corpus is indexed once
   * ([[corpusIndex]]: band hashes + sorted word-hash sets), each incoming
-  * doc computes its MinHash signature in EXPRESSION space — same
-  * (a·x + b) mod p family, seed, and 16×4 banding as d02's MinHashAgg
-  * path, drawn from [[MinHashAgg.hashParams]] and pinned bit-identical
-  * by StreamDedupSpec — candidates come from an equi-join on (band, bh)
-  * against the static index, each (incoming, corpus) pair is emitted
-  * exactly once via the d02 first-matching-band rule, and the exact
-  * sorted-set Jaccard verify kills LSH false positives. No watermark, no
-  * state store: every micro-batch is a pure join against the index.
-  *
-  * A per-doc signature needs no aggregate here because a document
-  * arrives as ONE row (text column), so `transform` + `array_min` cover
-  * what d02's explode→groupBy sketch does across many token rows.
+  * doc is banded by the SAME per-doc LSH frame d02 runs
+  * (`DedupOps.lshDocFrame`: tokenizer, MinHash signature and the
+  * threshold-adaptive banding are d02's own code, not a copy),
+  * candidates come from an equi-join on (band, bh) against the static
+  * index, each (incoming, corpus) pair is emitted exactly once via d02's
+  * `firstBandMatch` rule, and the exact sorted-set Jaccard verify kills
+  * LSH false positives. No watermark, no state store: every micro-batch
+  * is a pure join against the index.
   */
 object StreamDedup {
 
-  private val P = 2147483647L // 2^31 − 1, prime — d02's token-hash modulus
-  private val numHashes = 64
-  private val numBands = 16
-  private val rowsPerBand = numHashes / numBands
-  private val seed = 42L
+  /** A banded corpus index together with the threshold it was banded
+    * for: a probe banded for another threshold would share no band
+    * layout with it and silently match nothing. */
+  final case class CorpusIndex(frame: DataFrame, threshold: Double)
 
-  private val wordsExpr: Column =
-    expr("array_distinct(filter(split(text, ' '), x -> x != ''))")
-
-  /** (words → sig): wh = pmod(xxhash64(word), P) computed ONCE per word,
-    * then the fused native [[graft.functions.MinHashSig]] kernel takes
-    * all 64 minima of (a_i·wh + b_i) mod P in one pass (the replaced
-    * 64-transform chain re-hashed every word 64× and allocated 64
-    * intermediate arrays per doc). a·wh + b < (2^31)^2 + 2^31 — no
-    * BIGINT overflow. Callers drop empty docs (they cannot be near-dups
-    * at any threshold); the kernel would give them all-MaxValue sigs. */
-  private[graft] def sigExpr(wordsCol: String): Column =
-    graft.functions.VectorFunctions.minhash_sig(
-      expr(s"transform($wordsCol, w -> pmod(xxhash64(w), ${P}L))"),
-      numHashes, seed)
-
-  /** d02's banding: bh[band] = xxhash64 of the band's 4 signature rows. */
-  private def bandHashExprs(sigCol: String): Seq[Column] =
-    (0 until numBands).map { bnd =>
-      xxhash64((bnd * rowsPerBand until (bnd + 1) * rowsPerBand).map(i =>
-        element_at(col(sigCol), i + 1)): _*)
-    }
-
-  /** Adds `bhs` (all 16 band hashes), `hs` (sorted word-hash set for the
-    * exact verify), and explodes to one row per band. */
-  private def banded(docs: DataFrame, idOut: String): DataFrame = {
-    val withSig = docs
-      .withColumn("words", wordsExpr)
-      .filter(size(col("words")) > 0)
-      .withColumn("sig", sigExpr("words"))
-      .withColumn("bhs", array(bandHashExprs("sig"): _*))
-      .withColumn("hs", array_sort(expr("transform(words, w -> xxhash64(w))")))
-    withSig
-      .select(col("doc_id").as(idOut), col("bhs"), col("hs"),
-        posexplode(col("bhs")).as(Seq("band", "bh")))
+  /** One row per (doc, band) of a (doc_id, text) frame: the doc's id as
+    * `idOut`, its band vector and word-hash set under `prefix`, and the
+    * exploded (band, bh) join key. */
+  private def banded(docs: DataFrame, threshold: Double, idOut: String,
+      prefix: String): (DataFrame, Int) = {
+    val (perDoc, numBands) = lshDocFrame(docs, threshold)
+    (perDoc.select(col("doc_id").as(idOut), col("bhs").as(prefix + "bhs"),
+      col("hs").as(prefix + "hs"), posexplode(col("bhs")).as(Seq("band", "bh"))),
+      numBands)
   }
 
-  /** One row per (corpus doc, band): the static LSH index joined against
-    * every micro-batch. Size: 16 rows/doc, each carrying the 128-byte
-    * band vector + the doc's word-hash set — build once, cache or
-    * persist to parquet for a long-lived ingest stream. */
-  def corpusIndex(corpus: DataFrame): DataFrame =
-    banded(corpus, "corpus_doc_id")
-      .select(col("corpus_doc_id"), col("band"), col("bh"),
-        col("bhs").as("c_bhs"), col("hs").as("c_hs"))
+  /** The static LSH index joined against every micro-batch: one row per
+    * (corpus doc, band) at the banding `lshBandingFor(threshold)` picks
+    * (16 bands at 0.9, 32 at 0.8), each carrying the band vector + the
+    * doc's word-hash set — build once, cache or persist to parquet for
+    * a long-lived ingest stream. */
+  def corpusIndex(corpus: DataFrame, threshold: Double = 0.9): CorpusIndex =
+    CorpusIndex(banded(corpus, threshold, "corpus_doc_id", "c_")._1, threshold)
 
   /** The matcher: works identically on a streaming or batch `incoming`
     * frame (doc_id, text) — StreamDedupSpec pins batch ≡ streaming.
-    * Returns (in_doc_id, corpus_doc_id, jaccard ≥ threshold). */
-  def matchesAgainstCorpus(incoming: DataFrame, corpusIdx: DataFrame,
-      threshold: Double = 0.9): DataFrame = {
-    val q = banded(incoming, "in_doc_id")
-    // exactly-once per pair: keep only the FIRST band where the two band
-    // vectors agree (the d02 CASE-chain rule — codegen-friendly, no
-    // dedup state in the stream)
-    val firstMatch = (0 until numBands)
-      .map(i => (col("bhs").getItem(i) === col("c_bhs").getItem(i), lit(i)))
-      .foldLeft(Option.empty[Column]) {
-        case (None, (cond, v)) => Some(when(cond, v))
-        case (Some(acc), (cond, v)) => Some(acc.when(cond, v))
-      }.get
-    q.join(corpusIdx, Seq("band", "bh"))
-      .filter(col("band") === firstMatch)
+    * Returns (in_doc_id, corpus_doc_id, jaccard ≥ the index threshold). */
+  def matchesAgainstCorpus(incoming: DataFrame, idx: CorpusIndex): DataFrame = {
+    val (q, numBands) = banded(incoming, idx.threshold, "in_doc_id", "")
+    q.join(idx.frame, Seq("band", "bh"))
+      .filter(col("band") === firstBandMatch(col("bhs"), col("c_bhs"), numBands))
       .withColumn("jaccard", sorted_long_jaccard(col("hs"), col("c_hs")))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= idx.threshold)
       .select(col("in_doc_id"), col("corpus_doc_id"), col("jaccard"))
   }
 }

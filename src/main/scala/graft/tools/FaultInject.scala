@@ -205,10 +205,11 @@ object FaultInject {
 
   // ───────────────────────── streaming fault receipts (r13 ask #4) ──
 
-  /** Deterministic hour-chunked event fixture (the StreamScaleBench
-    * shape, smaller): `chunks` event-time hours, 4 files per chunk
-    * written sequentially so `maxFilesPerTrigger=4` replays exactly one
-    * chunk per micro-batch in event-time order. */
+  /** Deterministic hour-chunked event fixture (the shape of the 10M-event
+    * streaming receipts in BASELINE.md, smaller): `chunks` event-time
+    * hours, 4 files per chunk written sequentially so
+    * `maxFilesPerTrigger=4` replays exactly one chunk per micro-batch in
+    * event-time order. */
   private def genEventChunks(spark: org.apache.spark.sql.SparkSession,
       dir: String, n: Long, chunks: Int): Unit = {
     val perChunk = n / chunks

@@ -59,4 +59,14 @@ class EnvKnobsSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       s"mutable collection in operator code:\n${hits.mkString("\n")}")
   }
+
+  test("the MinHash signature is built only in DedupOps") {
+    // the streaming gate bands through DedupOps.lshDocFrame; a second
+    // signature site is a copy that can drift from d02's banding
+    val (inDedup, elsewhere) = operatorHits("""minhash_sig\(""".r)
+      .partition(_.startsWith("src/main/scala/graft/operators/DedupOps.scala:"))
+    assert(inDedup.nonEmpty, "DedupOps no longer builds the signature")
+    assert(elsewhere.isEmpty,
+      s"MinHash signature outside DedupOps:\n${elsewhere.mkString("\n")}")
+  }
 }
